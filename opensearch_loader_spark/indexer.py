@@ -18,9 +18,10 @@ Stages (all DataFrame/Arrow; no per-row Python — driver input_hint):
                        see tokenize_postings docstring)
  5. skew plan          df per term; head terms split into ceil(df/rows_per_run)
                        salted runs (SURVEY.md §4.2.1)
- 6. pack               repartition(term, salt) → applyInPandas: sort by docID,
-                       delta-gap + varbyte encode docIDs/tfs/doc_lens, blocks of
-                       BLOCK_SIZE docs, per-block max score bound (block-max)
+ 6. pack               repartition(term, run) → mapInArrow, one vectorized pass
+                       per partition over all (term, run) groups: sort by
+                       docID, delta-gap + varbyte encode docIDs/tfs/doc_lens,
+                       blocks of BLOCK_SIZE docs, per-block max score bound
  7. write              postings parquet partitioned by bucket=hash(term)%B
                        (query-time partition pruning); docs table; term stats;
                        manifest with snapshot id; per-bucket lineage rows
@@ -42,6 +43,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -279,8 +282,10 @@ def prepare_docs(
         # hashes to 0 mod 1), so per-pid counts are exact from a driver-side
         # searchsorted — the second url aggregation job is pure overhead at
         # this size (round 6, guide §1.2: fewer passes). Same pid function:
-        # pid = #(boundaries ≤ url), and np.searchsorted side='right' on the
-        # sorted url array counts exactly that per boundary.
+        # pid = #(boundaries ≤ url). edges[i] = searchsorted(urls, b_i,
+        # side='left') is the index of the first url ≥ b_i, so urls at or
+        # past edges[i] have pid > i; a url EQUAL to b_i belongs above the
+        # boundary, which is why side='left' (not 'right') is correct.
         edges = np.searchsorted(
             np.asarray(sample, dtype=object), np.asarray(boundaries, dtype=object),
             side="left",
@@ -737,56 +742,209 @@ def tokenize_partial_runs(
     return docs.select("doc_id", "text").mapInPandas(_tok, schema=PARTIAL_SCHEMA)
 
 
-def _make_partial_merger(avgdl: float, block_size: int = BLOCK_SIZE):
+def arrow_blob(arr) -> np.ndarray:
+    """The concatenated bytes of a binary Arrow array as a uint8 view — the
+    values buffer between the first and last offset, no copy. Null and
+    empty values add no bytes, so this equals ``b"".join(values)``."""
+    if len(arr) == 0 or arr.buffers()[2] is None:
+        return np.empty(0, dtype=np.uint8)
+    _, offs, data = arr.buffers()
+    odt = np.int64 if arr.type == pa.large_binary() else np.int32
+    o = np.frombuffer(offs, dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
+    return np.frombuffer(data, dtype=np.uint8)[o[0] : o[-1]]
+
+
+def _binary_array(blob: bytes, offsets: np.ndarray):
+    """(blob, offsets) from varbyte_encode_segments → a binary Arrow array
+    whose i-th value is ``blob[offsets[i]:offsets[i+1]]``, no per-value copy."""
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(blob)],
+    )
+
+
+def key_groups(t, keys: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """(group start rows, group index per row) of a key-sorted table."""
+    n = t.num_rows
+    new = np.zeros(n, dtype=bool)
+    new[0] = True
+    for k in keys:
+        c = t.column(k)
+        new[1:] |= pc.not_equal(c.slice(1), c.slice(0, n - 1)).to_numpy()
+    return np.flatnonzero(new), np.cumsum(new) - 1
+
+
+def whole_groups(batches, keys: list[str]):
+    """Re-chunk a partition's key-sorted Arrow batches into tables that hold
+    only complete key groups: the trailing group of each batch is carried
+    into the next one, so a task holds one batch plus its largest group. A
+    group that spans whole batches is appended to, never re-concatenated."""
+    carry: list = []
+    carry_key: dict = {}
+
+    def _same(rb, key_row: dict) -> bool:
+        return all(
+            pc.all(pc.equal(rb.column(k), key_row[k])).as_py() for k in keys
+        )
+
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        if carry and _same(rb, carry_key):
+            carry.append(rb)
+            continue
+        t = pa.Table.from_batches(carry + [rb])
+        last = int(key_groups(t, keys)[0][-1])
+        if last:
+            yield t.slice(0, last)
+        carry = t.slice(last).to_batches()
+        carry_key = {k: t.column(k)[t.num_rows - 1] for k in keys}
+    if carry:
+        yield pa.Table.from_batches(carry)
+
+
+def emit_segments(
+    seg_starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    avgdl: float,
+    block_size: int = BLOCK_SIZE,
+) -> dict:
+    """Encode MANY docID-sorted posting runs, concatenated, into block
+    columns in one vectorized pass — the one place posting bytes are laid
+    out (emit_blocks is its one-run case).
+
+    ``seg_starts`` are the runs' start offsets (non-decreasing; an empty run
+    repeats its successor's start and yields no block). Each run is cut into
+    blocks of ``block_size`` postings; every block gets its delta-gap +
+    varbyte payloads and its block-max score bound (the idf-free BM25 part
+    maximum). Byte-identical to encoding each run on its own: varbyte codes
+    values independently and the delta restarts at every block start.
+
+    Returns per-block columns ``seg`` (the run index), ``block_id`` (index
+    within its run), ``first_doc_id``, ``last_doc_id``, ``n_docs``,
+    ``max_tf_norm`` and ``(blob, offsets)`` pairs ``doc_gaps``, ``tfs``,
+    ``dls``."""
+    from opensearch_loader_spark.functions.varbyte import (
+        delta_encode_segments,
+        varbyte_encode_segments,
+    )
+
+    k1, b = BM25_K1, BM25_B
+    d = np.asarray(doc_ids).astype(np.uint64)
+    t = np.asarray(tfs).astype(np.uint64)
+    l = np.asarray(dls).astype(np.uint64)
+    seg_starts = np.asarray(seg_starts, dtype=np.int64)
+    seg_len = np.diff(np.append(seg_starts, len(d)))
+    nb = -(-seg_len // block_size)
+    seg = np.repeat(np.arange(len(seg_starts)), nb)
+    block_id = np.arange(len(seg)) - np.repeat(np.cumsum(nb) - nb, nb)
+    starts = seg_starts[seg] + block_id * block_size
+    ends = np.minimum(starts + block_size, (seg_starts + seg_len)[seg])
+    tff = t.astype(np.float64)
+    dlf = l.astype(np.float64)
+    part = (tff * (k1 + 1.0)) / (tff + k1 * (1.0 - b + b * dlf / avgdl))
+    return {
+        "seg": seg,
+        "block_id": block_id,
+        "first_doc_id": d[starts],
+        "last_doc_id": d[ends - 1],
+        "n_docs": ends - starts,
+        "max_tf_norm": np.maximum.reduceat(part, starts),
+        "doc_gaps": varbyte_encode_segments(
+            delta_encode_segments(d, starts), starts
+        ),
+        "tfs": varbyte_encode_segments(t, starts),
+        "dls": varbyte_encode_segments(l, starts),
+    }
+
+
+def blocks_batch(terms, runs, cols: dict):
+    """emit_segments columns + per-run term and run arrays → one Arrow
+    record batch of BLOCK_SCHEMA."""
+    seg = cols["seg"]
+    return pa.RecordBatch.from_arrays(
+        [
+            pc.take(terms, pa.array(seg)),
+            pa.array(np.asarray(runs)[seg], type=pa.int32()),
+            pa.array(cols["block_id"], type=pa.int32()),
+            pa.array(cols["first_doc_id"].astype(np.int64)),
+            pa.array(cols["last_doc_id"].astype(np.int64)),
+            pa.array(cols["n_docs"], type=pa.int32()),
+            pa.array(cols["max_tf_norm"], type=pa.float64()),
+            *(_binary_array(*cols[c]) for c in ("doc_gaps", "tfs", "dls")),
+        ],
+        names=[f.name for f in BLOCK_SCHEMA.fields],
+    )
+
+
+def decode_postings(t, n_col: str):
+    """Segmented decode of a table's (doc_gaps, tfs, dls) varbyte columns:
+    ONE decode per stream over the joined bytes (varbyte is self-
+    delimiting), with the per-row posting counts in ``n_col`` driving the
+    segmented delta reverse. Returns (doc_ids, tfs, dls, counts) arrays."""
     from opensearch_loader_spark.functions.varbyte import (
         delta_decode_segments,
         varbyte_decode,
     )
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iloc[0]
-        run = int(pdf["run"].iloc[0])
-        # segmented decode: varbyte is self-delimiting, so ONE decode of the
-        # concatenated blobs replaces per-row decode calls; the stored per-
-        # partial posting counts (`n`) drive the segmented delta reverse.
-        nvals = pdf["n"].values.astype(np.int64)
-        gaps = varbyte_decode(
-            b"".join(bytes(x) for x in pdf["doc_gaps"].values)
-        )
-        d = delta_decode_segments(gaps, nvals).astype(np.int64)
-        t = varbyte_decode(
-            b"".join(bytes(x) for x in pdf["tfs"].values)
-        ).astype(np.int64)
-        l = varbyte_decode(
-            b"".join(bytes(x) for x in pdf["dls"].values)
-        ).astype(np.int64)
-        # partials are disjoint sorted docID sets ((term, doc) unique across
-        # the deduped corpus) — one argsort restores the global order
-        order = np.argsort(d, kind="stable")
-        rows = emit_blocks(
-            term, run, d[order], t[order], l[order], avgdl, block_size
-        )
-        return pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
+    n = t.column(n_col).to_numpy(zero_copy_only=False).astype(np.int64)
+    col = lambda c: arrow_blob(t.column(c).combine_chunks())  # noqa: E731
+    d = delta_decode_segments(varbyte_decode(col("doc_gaps")), n)
+    return d.astype(np.int64), varbyte_decode(col("tfs")), varbyte_decode(col("dls")), n
 
-    return merge
+
+def run_starts(gid: np.ndarray, n_groups: int) -> np.ndarray:
+    """Start offsets of each group's postings once they are ordered by
+    group — the run layout emit_segments takes (empty groups included)."""
+    counts = np.bincount(gid, minlength=n_groups)
+    return np.cumsum(counts) - counts
+
+
+def _pack_groups(t, avgdl: float, block_size: int):
+    """Merge every (term, run) group of partial runs in ``t`` into final
+    blocks. Partials of one group hold disjoint docID sets ((term, doc) is
+    unique across the deduped corpus), so one (group, doc) sort restores
+    each run's global order."""
+    d, tf, dl, n = decode_postings(t, "n")
+    rows, row_gid = key_groups(t, ["term", "run"])
+    gid = np.repeat(row_gid, n)
+    order = np.lexsort((d, gid))
+    cols = emit_segments(
+        run_starts(gid, len(rows)), d[order], tf[order], dl[order], avgdl, block_size
+    )
+    return blocks_batch(
+        pc.take(t.column("term").combine_chunks(), pa.array(rows)),
+        t.column("run").to_numpy()[rows],
+        cols,
+    )
 
 
 def pack_partial_runs(
     partials: DataFrame,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
-    """(term, run)-grouped merge of map-side partial runs into final blocks.
-    The repartition IS the salted repartition-by-term (same contract as
-    pack_blocks); partition count sized by data, floor 32."""
-    n = shuffle_partitions or max(
-        32, partials.sparkSession.sparkContext.defaultParallelism
-    )
+    """Merge map-side partial runs into final blocks, one vectorized pass
+    per partition. The (term, run) repartition IS the salted repartition-
+    by-term (same contract as pack_blocks); its partition count is left to
+    spark.sql.shuffle.partitions and AQE coalescing, because a task's memory
+    is one Arrow batch plus its largest (term, run) group however many
+    groups it holds. Within a partition, rows sorted by (term, run) arrive
+    as whole groups (whole_groups), and each chunk is decoded, sorted and
+    re-encoded with one segmented pass per stream — no Python call per
+    group."""
+
+    def _pack(batches):
+        for t in whole_groups(batches, ["term", "run"]):
+            yield _pack_groups(t, avgdl, block_size)
+
     return (
-        partials.repartition(n, "term", "run")
-        .groupBy("term", "run")
-        .applyInPandas(_make_partial_merger(avgdl, block_size), schema=BLOCK_SCHEMA)
+        partials.repartition("term", "run")
+        .sortWithinPartitions("term", "run")
+        .mapInArrow(_pack, BLOCK_SCHEMA)
     )
 
 
@@ -831,61 +989,12 @@ def emit_blocks(
     avgdl: float,
     block_size: int = BLOCK_SIZE,
 ) -> list[tuple]:
-    """Encode one docID-sorted posting run into BLOCK_SCHEMA rows: delta-gap
-    + varbyte payloads in blocks of ``block_size`` docs, each with its
-    block-max score bound (idf-free BM25 part maximum). Shared by the build
-    packer and the compaction merger — the ONE place posting bytes are laid
-    out.
-
-    Vectorized ACROSS blocks (round 4): one segmented delta + one varbyte
-    pass per stream instead of three varbyte_encode calls per 128-value
-    block (each call carried ~133 µs of fixed overhead — at 435k postings
-    per head-term run that was ~1.3 s/run of pure call overhead, ~20× the
-    vectorized cost). Output bytes are identical: varbyte encodes values
-    independently, so per-block slices of the whole-run encoding equal
-    per-block encodings."""
-    from opensearch_loader_spark.functions.varbyte import (
-        delta_encode_segments,
-        varbyte_encode_segments,
-    )
-
-    k1, b = BM25_K1, BM25_B
-    d = doc_ids.astype(np.uint64)
-    t = tfs.astype(np.uint64)
-    l = dls.astype(np.uint64)
-    n = len(d)
-    if n == 0:
-        return []
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    ends = np.append(starts[1:], n)
-    tff = t.astype(np.float64)
-    dlf = l.astype(np.float64)
-    part = (tff * (k1 + 1.0)) / (tff + k1 * (1.0 - b + b * dlf / avgdl))
-    maxs = np.maximum.reduceat(part, starts)
-    g_blob, g_off = varbyte_encode_segments(
-        delta_encode_segments(d, starts), starts
-    )
-    t_blob, t_off = varbyte_encode_segments(t, starts)
-    l_blob, l_off = varbyte_encode_segments(l, starts)
-    firsts = d[starts]
-    lasts = d[ends - 1]
-    rows = []
-    for i in range(len(starts)):
-        rows.append(
-            (
-                term,
-                run,
-                i,
-                int(firsts[i]),
-                int(lasts[i]),
-                int(ends[i] - starts[i]),
-                float(maxs[i]),
-                g_blob[g_off[i] : g_off[i + 1]],
-                t_blob[t_off[i] : t_off[i + 1]],
-                l_blob[l_off[i] : l_off[i + 1]],
-            )
-        )
-    return rows
+    """Encode one docID-sorted posting run into BLOCK_SCHEMA rows — the
+    one-run case of emit_segments, used by the row-shuffle reference
+    packer."""
+    cols = emit_segments(np.zeros(1, np.int64), doc_ids, tfs, dls, avgdl, block_size)
+    rb = blocks_batch(pa.array([term], pa.string()), [run], cols)
+    return [tuple(r.values()) for r in rb.to_pylist()]
 
 
 def _make_packer(avgdl: float, block_size: int = BLOCK_SIZE):
@@ -1043,6 +1152,17 @@ def _build_index_impl(
     c0 = _host_cpu_secs()
     stage_t: dict[str, float] = {}
     stage_cpu: dict[str, float] = {}
+    mark = [0.0, 0.0]  # (wall, cpu) offsets from t0/c0 at the last stage end
+
+    def _stage(name: str) -> None:
+        # per-stage durations as differences of ROUNDED offsets, so they
+        # sum to the last offset and never past build_secs
+        wall = round(time.time() - t0, 3)
+        cpu = round(_host_cpu_secs() - c0, 3)
+        stage_t[name] = round(wall - mark[0], 3)
+        stage_cpu[name] = round(cpu - mark[1], 3)
+        mark[:] = [wall, cpu]
+
     aux: dict = {}
     docs = prepare_docs(corpus, _aux=aux, analyzer=analyzer)
     # snapshot id falls out of prepare_docs's own offsets collect — resume
@@ -1069,8 +1189,7 @@ def _build_index_impl(
     stats = obs.get
     N = int(stats["N"])
     avgdl = (float(stats["dl_sum"]) / N) if N else 0.0
-    stage_t["docs_write"] = round(time.time() - t0, 3)
-    stage_cpu["docs_write"] = round(_host_cpu_secs() - c0, 3)
+    _stage("docs_write")
 
     # tokenize from the WRITTEN docs table, not a second in-memory cache of
     # the full corpus (round-3): the parquet file IS the cache — compressed,
@@ -1088,8 +1207,7 @@ def _build_index_impl(
     # that existed only to feed the exact skew plan — is gone entirely.
     docs_read = spark.read.parquet(os.path.join(seg_dir, "docs"))
     plan = sampled_skew_plan(docs_read, N, rows_per_run, analyzer=analyzer)
-    stage_t["skew_plan"] = round(time.time() - t0, 3)
-    stage_cpu["skew_plan"] = round(_host_cpu_secs() - c0, 3)
+    _stage("skew_plan")
     partials = tokenize_partial_runs(docs_read, plan, analyzer=analyzer)
     blocks = with_bucket(
         pack_partial_runs(partials, avgdl, block_size), n_buckets
@@ -1123,8 +1241,7 @@ def _build_index_impl(
     blocks.write.mode("append" if done_buckets else "overwrite").partitionBy(
         "bucket"
     ).parquet(os.path.join(seg_dir, "postings"))
-    stage_t["postings_write"] = round(time.time() - t0, 3)
-    stage_cpu["postings_write"] = round(_host_cpu_secs() - c0, 3)
+    _stage("postings_write")
 
     # term stats + lineage from ONE aggregation over the still-cached blocks
     # (judge round-1 item #1: no extra passes). Resume-append is the one case
@@ -1168,8 +1285,7 @@ def _build_index_impl(
     per_term.select("term", "df", "bucket").write.mode("overwrite").parquet(
         os.path.join(seg_dir, "term_stats")
     )
-    stage_t["term_stats_write"] = round(time.time() - t0, 3)
-    stage_cpu["term_stats_write"] = round(_host_cpu_secs() - c0, 3)
+    _stage("term_stats_write")
 
     # lineage checkpoints: one row per bucket (north rule: snapshot id,
     # partition hash, postings count, bytes written, status)
@@ -1186,8 +1302,7 @@ def _build_index_impl(
         .withColumn("ts", F.current_timestamp())
     )
     lineage.write.mode("overwrite").parquet(ckpt_dir)
-    stage_t["lineage_write"] = round(time.time() - t0, 3)
-    stage_cpu["lineage_write"] = round(_host_cpu_secs() - c0, 3)
+    _stage("lineage_write")
     per_term.unpersist()
     per_run.unpersist()
     # unpersist the PERSISTED handle — on resume-append `blocks` was rebound

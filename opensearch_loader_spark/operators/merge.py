@@ -13,29 +13,50 @@ Compaction k-way-merges all live segments per term into one new segment:
 
 Spark shape: ``unionByName`` of per-segment block tables → compaction skew
 plan (head terms split into contiguous docID ranges, df from block metadata)
-→ ``groupBy(term, m_run).applyInPandas(merge)`` (SURVEY.md §4.2.3). A head
-term therefore merges across MANY tasks — one per docID range — and the
-merged segment keeps multi-run posting lists (run = range index), which the
-query engine's WAND already consumes. Doc-level shadowing is resolved with a
-broadcast set of doc_ids that exist in newer segments ("reindexed docs"):
-postings for those doc_ids are dropped from older segments wholesale, then
-the newer segments' postings are taken as-is.
+→ ``repartition(term, m_run)`` + ``sortWithinPartitions`` → one
+``mapInArrow`` reducer per partition that merges EVERY (term, m_run) group
+of an Arrow batch at once: one segmented decode per stream, vectorized
+range filters, tombstone masks and newest-wins, one segmented block emit
+(indexer.emit_segments). A head term therefore merges across MANY tasks —
+one per docID range — and the merged segment keeps multi-run posting lists
+(run = range index), which the query engine already consumes. Doc-level
+shadowing is resolved with bitmaps of the doc_ids that exist in newer
+segments ("reindexed docs"): postings for those doc_ids are dropped from
+older segments wholesale, then the newer segments' postings are taken
+as-is. Small indexes broadcast the bitmaps; large ones ship per-group
+bitmap slices as extra "shadow" rows of the group itself.
+
+The merged segment is written under a name MANIFEST does not list, and
+becomes visible by one atomic MANIFEST rewrite, so no step before that flip
+touches a live segment. The engine assumes one writer per index.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from opensearch_loader_spark import BLOCK_SIZE
 from opensearch_loader_spark import query_engine as qe
-from opensearch_loader_spark.indexer import BLOCK_SCHEMA, with_bucket
+from opensearch_loader_spark.indexer import (
+    BLOCK_SCHEMA,
+    arrow_blob,
+    blocks_batch,
+    decode_postings,
+    emit_segments,
+    key_groups,
+    run_starts,
+    whole_groups,
+    with_bucket,
+)
 from opensearch_loader_spark.query_engine import (
     bitmap_contains,
     bitmap_union,
@@ -43,93 +64,117 @@ from opensearch_loader_spark.query_engine import (
     docid_bitmap_slices,
     load_index_info,
     max_doc_of,
-    slice_map,
 )
+
+
+def _in_shadow_slices(gid, seg, d, sh, sh_gid, n_segs, seg_names):
+    """Per posting: is its doc set in the shadow bitmap slice shipped to
+    its own (group, segment)? ``sh`` holds the groups' "shadow" rows
+    (segment, slice_id, bm), ``sh_gid`` their group index. One sorted-key
+    lookup for all postings instead of one slice map per group."""
+    out = np.zeros(len(d), dtype=bool)
+    if sh.num_rows == 0 or len(d) == 0:
+        return out
+    sid = d // qe.SLICE_DOCS
+    sh_sid = sh.column("slice_id").to_numpy().astype(np.int64)
+    sh_seg = pc.index_in(sh.column("segment"), value_set=seg_names).to_numpy()
+    codes, inv = np.unique(np.concatenate((sid, sh_sid)), return_inverse=True)
+    key = (gid * n_segs + seg) * len(codes) + inv[: len(d)]
+    sk = (sh_gid * n_segs + sh_seg) * len(codes) + inv[len(d):]
+    o = np.argsort(sk)
+    sk = sk[o]
+    i = np.minimum(np.searchsorted(sk, key), len(sk) - 1)
+    bms = arrow_blob(sh.column("bm").combine_chunks())
+    bms = bms.reshape(-1, qe.SLICE_DOCS // 8)
+    off = d - sid * qe.SLICE_DOCS
+    bits = (bms[o[i], off >> 3] >> (off & 7)) & 1
+    return (sk[i] == key) & (bits == 1)
 
 
 def _make_merger(
     avgdl: float,
     block_size: int,
-    newest_rank: dict[str, int],
+    segs: list[str],
     shadow_by_segment: dict[str, "tuple[int, bytes] | None"],
-    head_plan: dict[str, tuple[int, int, int]] | None = None,
+    head_plan: dict[str, tuple[int, int, int]],
 ):
-    from opensearch_loader_spark.functions.varbyte import delta_decode, varbyte_decode
-    from opensearch_loader_spark.indexer import emit_blocks
+    seg_names = pa.array(segs, type=pa.string())
+    plan_terms = pa.array(list(head_plan), type=pa.string())
+    plan = np.array(list(head_plan.values()), dtype=np.int64).reshape(-1, 3)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iloc[0]
-        # doc-range salting (head terms): the group key is (term, m_run);
-        # this task owns only the docs whose range index == m_run. Blocks
-        # overlapping the range boundary are decoded here AND in the
-        # neighbouring run's task — each keeps only its own docs, so the
-        # output runs stay disjoint (exactly what WAND multi-run expects).
-        m_run = int(pdf["m_run"].iloc[0]) if "m_run" in pdf.columns else 0
-        split = (head_plan or {}).get(term)
-        # sharded mode (VERDICT r3 item 3): shadow bitmaps arrive as SLICE
-        # marker rows of this very group — assembled into per-segment slice
-        # maps probed by bitmap_contains; per-task payload ∝ the group's
-        # blocks' occupied slices, never max_doc.
-        shadow_local: dict | None = None
-        if "kind" in pdf.columns:
-            kinds = pdf["kind"].values
-            s_rows = pdf[kinds == "shadow"]
-            shadow_local = {}
-            for seg, grp in s_rows.groupby("segment"):
-                shadow_local[seg] = slice_map(
-                    zip(grp["slice_id"].values, grp["bm"].values)
-                )
-            pdf = pdf[kinds == "block"]
-            if len(pdf) == 0:
-                return pd.DataFrame(columns=[f.name for f in BLOCK_SCHEMA.fields])
+    def merge_groups(t):
+        rows, row_gid = key_groups(t, ["term", "m_run"])
+        terms = pc.take(t.column("term").combine_chunks(), pa.array(rows))
+        runs = t.column("m_run").to_numpy()[rows]
+        sh = None
+        if "kind" in t.column_names:
+            is_sh = pc.equal(t.column("kind"), "shadow").to_numpy(
+                zero_copy_only=False
+            )
+            sh, sh_gid = t.filter(is_sh), row_gid[is_sh]
+            t, row_gid = t.filter(~is_sh), row_gid[~is_sh]
+        d, tf, dl, n = decode_postings(t, "n_docs")
+        gid = np.repeat(row_gid, n)
+        seg = np.repeat(
+            pc.index_in(t.column("segment"), value_set=seg_names).to_numpy(), n
+        )
+        keep = np.ones(len(d), dtype=bool)
+        # doc-range salting (head terms): group (term, m_run) owns only the
+        # docs whose range index == m_run. Blocks overlapping a range
+        # boundary reach both neighbouring groups; each keeps its own docs,
+        # so the output runs stay disjoint.
+        p = np.repeat(
+            pc.fill_null(
+                pc.index_in(t.column("term"), value_set=plan_terms), -1
+            ).to_numpy(),
+            n,
+        )
+        head = p >= 0
+        if head.any():
+            lo, width, n_splits = plan[p[head]].T
+            own = np.repeat(t.column("m_run").to_numpy(), n)[head]
+            keep[head] = np.minimum((d[head] - lo) // width, n_splits - 1) == own
+        # TOMBSTONE shadowing: a doc re-indexed by a newer segment
+        # invalidates ALL its postings in older segments — including for
+        # terms the new text no longer contains (which newest-wins-per-
+        # (term, doc) alone would miss)
+        if sh is not None:
+            keep &= ~_in_shadow_slices(
+                gid, seg, d, sh, sh_gid, len(segs), seg_names
+            )
+        else:
+            for i, s in enumerate(segs):
+                bm = shadow_by_segment.get(s)
+                m = seg == i
+                if bm is not None and m.any():
+                    keep[m] &= ~bitmap_contains(d[m], bm)
+        d, tf, dl, gid, seg = d[keep], tf[keep], dl[keep], gid[keep], seg[keep]
+        # newest wins per (group, doc) (belt-and-braces; shadowing already
+        # removed re-indexed docs from older segments)
+        order = np.lexsort((-seg, d, gid))
+        d, tf, dl, gid = d[order], tf[order], dl[order], gid[order]
+        first = np.ones(len(d), dtype=bool)
+        first[1:] = (d[1:] != d[:-1]) | (gid[1:] != gid[:-1])
+        d, tf, dl, gid = d[first], tf[first], dl[first], gid[first]
+        starts = run_starts(gid, len(rows))
+        return blocks_batch(
+            terms, runs, emit_segments(starts, d, tf, dl, avgdl, block_size)
+        )
 
-        def shadow_of(seg: str):
-            if shadow_local is not None:
-                return shadow_local.get(seg)
-            return shadow_by_segment.get(seg)
-        # decode all blocks from all segments; TOMBSTONE shadowing first: a
-        # doc re-indexed by a newer segment invalidates ALL its postings in
-        # older segments — including for terms the new text no longer
-        # contains (which newest-wins-per-(term,doc) alone would miss)
-        doc_ids, tfs, dls, ranks = [], [], [], []
-        for row in pdf.itertuples(index=False):
-            d = delta_decode(varbyte_decode(bytes(row.doc_gaps))).astype(np.int64)
-            t = varbyte_decode(bytes(row.tfs)).astype(np.int64)
-            l = varbyte_decode(bytes(row.dls)).astype(np.int64)
-            if split is not None:
-                lo, width, n_splits = split
-                run_of = np.minimum((d - lo) // width, n_splits - 1)
-                keep = run_of == m_run
-                if not keep.all():
-                    d, t, l = d[keep], t[keep], l[keep]
-            shadow = shadow_of(row.segment)
-            if len(d) and shadow is not None:
-                keep = ~bitmap_contains(d, shadow)
-                d, t, l = d[keep], t[keep], l[keep]
-            if len(d) == 0:
-                continue
-            doc_ids.append(d)
-            tfs.append(t)
-            dls.append(l)
-            ranks.append(np.full(len(d), newest_rank[row.segment], dtype=np.int64))
-        if not doc_ids:
-            return pd.DataFrame(columns=[f.name for f in BLOCK_SCHEMA.fields])
-        docs = np.concatenate(doc_ids)
-        tf = np.concatenate(tfs)
-        dl = np.concatenate(dls)
-        rk = np.concatenate(ranks)
-        # newest wins per doc (belt-and-braces; shadowing already removed
-        # re-indexed docs from older segments)
-        order = np.lexsort((-rk, docs))
-        docs, tf, dl = docs[order], tf[order], dl[order]
-        keep = np.ones(len(docs), dtype=bool)
-        keep[1:] = docs[1:] != docs[:-1]
-        docs, tf, dl = docs[keep], tf[keep], dl[keep]
-
-        rows = emit_blocks(term, m_run, docs, tf, dl, avgdl, block_size)
-        return pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
+    def merge(batches):
+        for t in whole_groups(batches, ["term", "m_run"]):
+            yield merge_groups(t)
 
     return merge
+
+
+def _unused_name(base: str, live: list[str]) -> str:
+    """``base``, or the first ``base-NNNNNN`` that MANIFEST does not list."""
+    name, i = base, 0
+    while name in live:
+        i += 1
+        name = f"{base}-{i:06d}"
+    return name
 
 
 def compact_segments(
@@ -145,15 +190,20 @@ def compact_segments(
     the newest segment (docID stability: docIDs are global across segments —
     updates reuse the same docID via the url→docID map, see
     incremental.build_delta_segment).
-    """
-    import numpy as np
 
+    The merge is written to ``out_segment``, or, when MANIFEST lists that
+    name, to the first ``out_segment-NNNNNN`` it does not list; the returned
+    manifest names the segment written. Only a leftover directory of that
+    unlisted name is removed before the write.
+    """
     info = load_index_info(index_dir)
     segs = [m["segment"] for m in info["segments"]]
     if len(segs) < 2:
         return {"merged": False, "reason": "single segment"}
-    newest_rank = {s: i for i, s in enumerate(segs)}  # later = newer
-
+    out_segment = _unused_name(out_segment, segs)
+    out_dir = os.path.join(index_dir, "segments", out_segment)
+    if os.path.exists(out_dir):
+        shutil.rmtree(out_dir)
     # per-segment tombstones (doc_ids re-indexed by any NEWER segment). Below
     # the broadcast threshold: packed driver bitmaps, exactly as the query
     # path. Above it (VERDICT r3 item 3): NO driver bitmap is ever built —
@@ -220,11 +270,19 @@ def compact_segments(
         .select("doc_id", *[F.col(f"_p.{c}").alias(c) for c in d_cols])
     )
 
-    stats = merged_docs.agg(
-        F.count("*").alias("N"), F.avg("doc_len").alias("avgdl"),
+    # merged docs are written first: N, avgdl and max_doc_id come from an
+    # Observation on that write (no separate aggregation job), and the
+    # postings merge needs avgdl for its block-max bounds
+    obs = Observation(f"compact-stats-{uuid.uuid4().hex[:8]}")
+    merged_docs.observe(
+        obs,
+        F.count(F.lit(1)).alias("N"),
+        F.sum("doc_len").alias("dl_sum"),
         F.max("doc_id").alias("max_doc_id"),
-    ).collect()[0]
-    N, avgdl = int(stats["N"]), float(stats["avgdl"])
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
+    stats = obs.get
+    N = int(stats["N"])
+    avgdl = float(stats["dl_sum"]) / N if N else 0.0
     max_doc_id = int(stats["max_doc_id"])
 
     blocks_parts = []
@@ -238,7 +296,7 @@ def compact_segments(
         all_blocks = all_blocks.unionByName(bdf)
 
     # --- compaction skew plan (judge round-1 item #2): head terms are split
-    # into contiguous docID ranges BEFORE the groupBy, mirroring the build's
+    # into contiguous docID ranges BEFORE the merge shuffle, mirroring the build's
     # salting — a head term is never concatenated/re-encoded in one task.
     # df comes from block METADATA (sum of n_docs) — no decode needed; it
     # over-counts shadowed docs slightly, which only makes splits finer.
@@ -285,6 +343,7 @@ def compact_segments(
     else:
         salted = all_blocks.withColumn("m_run", F.lit(0))
 
+    merge_cols = ["term", "m_run", "segment", "n_docs", "doc_gaps", "tfs", "dls"]
     if shadow_slices_df is not None:
         # slice need per (term, m_run, segment) from the blocks' DECODED
         # docIDs (bounded by n_docs per block — never the block's docID
@@ -307,7 +366,6 @@ def compact_segments(
                 ]
             )
 
-        merge_cols = ["term", "m_run", "segment", "doc_gaps", "tfs", "dls"]
         null = lambda typ: F.lit(None).cast(typ)  # noqa: E731
         shadowed = [
             s
@@ -330,6 +388,7 @@ def compact_segments(
         )
         shadow_part = need.join(shadow_slices_df, ["segment", "slice_id"]).select(
             "term", "m_run", "segment",
+            null("int").alias("n_docs"),
             null("binary").alias("doc_gaps"),
             null("binary").alias("tfs"),
             null("binary").alias("dls"),
@@ -337,28 +396,21 @@ def compact_segments(
             "slice_id", "bm",
         )
         salted = block_part.unionByName(shadow_part)
+    else:
+        salted = salted.select(*merge_cols)
 
     merged = (
-        salted.repartition(
-            spark.sparkContext.defaultParallelism, "term", "m_run"
-        )
-        .groupBy("term", "m_run")
-        .applyInPandas(
-            _make_merger(
-                avgdl, block_size, newest_rank, shadow_by_segment, head_plan
-            ),
+        salted.repartition("term", "m_run")
+        .sortWithinPartitions("term", "m_run")
+        .mapInArrow(
+            _make_merger(avgdl, block_size, segs, shadow_by_segment, head_plan),
             BLOCK_SCHEMA,
         )
     )
     merged = with_bucket(merged, info["n_buckets"])
-
-    out_dir = os.path.join(index_dir, "segments", out_segment)
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
     merged.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(out_dir, "postings")
     )
-    merged_docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
 
     written = spark.read.parquet(os.path.join(out_dir, "postings"))
     term_stats = (

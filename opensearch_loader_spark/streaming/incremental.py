@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +74,9 @@ def build_delta_segment(
     upsert=False → reference update-query semantics (doc_as_upsert=False):
                    rows with unknown urls are DROPPED and counted.
     Returns the manifest dict incl. update/skip counts.
+
+    ``segment`` must be a name MANIFEST does not list: a live segment's
+    name raises ValueError before anything is written.
     """
     import hashlib
     from collections.abc import Iterator
@@ -82,6 +86,8 @@ def build_delta_segment(
     from pyspark.sql import types as T
 
     info = load_index_info(index_dir)
+    if segment in [m["segment"] for m in info["segments"]]:
+        raise ValueError(f"segment {segment!r} is live in {index_dir}")
     n_buckets = info["n_buckets"]
     newest = info["segments"][-1]["segment"]
     # url → docID map across all live segments (newest wins)
@@ -228,7 +234,20 @@ def build_delta_segment(
         "doc_id", "url", "warc_ts", "lang", "doc_len", "text_sha256", "text"
     )
     seg_dir = os.path.join(index_dir, "segments", segment)
-    docs_out.write.mode("overwrite").parquet(os.path.join(seg_dir, "docs"))
+    # N, avgdl and max_doc_id fold into the docs write (as in the build) —
+    # no read-back job
+    from pyspark.sql import Observation
+
+    obs = Observation(f"delta-stats-{uuid.uuid4().hex[:8]}")
+    docs_out.observe(
+        obs,
+        F.count(F.lit(1)).alias("N"),
+        F.sum("doc_len").alias("dl_sum"),
+        F.max("doc_id").alias("max_doc_id"),
+    ).write.mode("overwrite").parquet(os.path.join(seg_dir, "docs"))
+    stats = obs.get
+    n_seg = int(stats["N"])
+    avgdl = float(stats["dl_sum"]) / n_seg
 
     # record re-indexed (pre-existing) doc_ids: older segments' postings for
     # these docs are stale and must be shadowed at query time until
@@ -283,11 +302,6 @@ def build_delta_segment(
         df_neg.write.mode("overwrite").parquet(os.path.join(seg_dir, "df_neg"))
         old_docs.unpersist()
 
-    stats = spark.read.parquet(os.path.join(seg_dir, "docs")).agg(
-        F.count("*").alias("N"), F.avg("doc_len").alias("avgdl"),
-        F.max("doc_id").alias("max_doc_id"),
-    ).collect()[0]
-
     # SAME single-pass postings path as the initial build (VERDICT r4 item
     # 3 — the delta previously kept the round-3 row-shuffle packer, so a
     # large backfill through stream_corpus_to_segments re-inherited the
@@ -303,7 +317,7 @@ def build_delta_segment(
     # pack with the DELTA's avgdl for block-max bounds; the query engine
     # rescales bounds by max(1, global_avgdl/seg_avgdl) for safety
     blocks = with_bucket(
-        pack_partial_runs(partials, float(stats["avgdl"]), block_size),
+        pack_partial_runs(partials, avgdl, block_size),
         n_buckets,
     )
     blocks.write.mode("overwrite").partitionBy("bucket").parquet(
@@ -322,8 +336,8 @@ def build_delta_segment(
     manifest = {
         "segment": segment,
         "snapshot_id": f"delta:{segment}",
-        "N": int(stats["N"]),
-        "avgdl": float(stats["avgdl"]),
+        "N": n_seg,
+        "avgdl": avgdl,
         "max_doc_id": max(int(max_id), int(stats["max_doc_id"])),
         "n_buckets": n_buckets,
         "block_size": block_size,
