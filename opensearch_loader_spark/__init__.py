@@ -13,7 +13,7 @@ and the delegated search-side operators natively on Spark:
 - ``corpus``         deterministic synthetic Common-Crawl-style corpus
 - ``indexer``        postings build: tokenize → skew-salted shuffle →
                      delta-gap+varbyte block packing with block-max metadata
-- ``query_engine``   BM25 top-k: naive DataFrame scorer + block-max WAND
+- ``query_engine``   BM25 top-k: naive DataFrame scorer + vectorized TAAT
 - ``operators``      dedup / similarity / update-merge / multimodal plumbing
 - ``plans``          mapping parse + validation (reference loader.py:281-458)
 - ``oracle``         pure-Python golden BM25 scorer (stand-in for OpenSearch)

@@ -2,7 +2,7 @@
 
 North-rule requirement: "(term, docID, tf) postings, delta-gap + varbyte
 compressed posting lists with per-block max-score metadata". These codecs run
-*inside* Arrow-batched pandas UDFs (applyInPandas block packing / WAND
+*inside* Arrow-batched pandas UDFs (block packing / query-time
 decoding), so they are pure numpy — no per-row Python in the hot path
 (driver input_hint).
 

@@ -1,4 +1,4 @@
-"""BM25 query engine — block-max WAND top-k over the compressed index.
+"""BM25 query engine — exact top-k over the compressed index.
 
 This natively implements the search path the reference delegates to
 OpenSearch (reference opensearch_client.py installs `text` mappings at
@@ -7,29 +7,25 @@ itself contains no search code). Lifecycle per SURVEY.md §3.4:
 
   query string → tokenize (same analyzer as build, analysis.py) →
   prune postings to query-term buckets (parquet partition pruning on
-  `bucket` + pushed `term IN` filter) → block-max WAND with a k-heap →
+  `bucket` + pushed `term IN` filter) → vectorized term-at-a-time BM25 →
   hydrate urls from the docs table (broadcast join of the tiny top-k).
 
 Distributed shape: scoring is partitioned by (query_id, docID-range chunk)
 — ``groupBy(query_id, chunk).applyInPandas(bmw)`` — with per-query chunk
 counts sized so no task holds more than ~POSTINGS_PER_TASK postings, then an
 exact merge of the per-chunk top-ks (each doc is scored fully in its one
-owning chunk). The UDF decodes varbyte blocks lazily — blocks whose upper
-bound can't beat the heap threshold are skipped WITHOUT decoding (that's the
-point of the per-block max_tf_norm metadata).
+owning chunk). The UDF decodes every varbyte block it receives; the
+per-block max_tf_norm metadata is stored but not used to skip blocks.
 
 Determinism (rank-identity with the oracle): float64; per-doc score sums
 per-term contributions in ascending term order; tie-break (score desc,
-doc_id asc); safe pruning uses strict `ub <= θ` only once the heap is full
-(candidates arrive in ascending doc_id, so an equal-score later doc can
-never enter the top-k — see oracle.py ordering).
+doc_id asc) — see oracle.py ordering.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from bisect import insort
 
 import numpy as np
 import pandas as pd
@@ -39,7 +35,7 @@ from pyspark.sql import types as T
 
 from opensearch_loader_spark import BM25_B, BM25_K1
 from opensearch_loader_spark.analysis import query_terms
-from opensearch_loader_spark.functions.bm25 import bm25_idf
+from opensearch_loader_spark.functions.bm25 import bm25_idf, bm25_term_score
 from opensearch_loader_spark.functions.varbyte import delta_decode, varbyte_decode
 
 
@@ -214,7 +210,9 @@ def assemble_slices(slice_rows) -> "tuple[int, bytes] | None":
 
 # --------------------------------------------------------------- index access
 
-_READER_CACHE: dict[str, "IndexReader"] = {}
+# readers keyed (index dir, MANIFEST mtime, SparkSession): every plan and
+# persisted frame a reader derives is bound to the session that built it
+_READER_CACHE: dict[tuple, "IndexReader"] = {}
 
 # allowed-docs bitmaps keyed (index fingerprint, doc_filter predicate) — a
 # repeated stored-field filter reuses its bitmap instead of re-scanning every
@@ -229,8 +227,9 @@ _ALLOWED_SLICES_CACHE: dict[tuple, DataFrame] = {}
 # reused plan takes ~0.18 s where a freshly built one pays ~0.4 s of
 # Catalyst analysis/optimization + py4j plan construction on top. This
 # caches no data and no results: every collect re-executes the plan against
-# the parquet files; the key embeds the index fingerprint (MANIFEST mtime),
-# so a rebuilt index can never serve a stale plan. Bounded FIFO.
+# the parquet files; the key embeds the index fingerprint (MANIFEST mtime
+# and session), so a rebuilt index or another session can never be served
+# a stale plan. Bounded FIFO.
 _PLAN_CACHE: dict[tuple, DataFrame] = {}
 _PLAN_CACHE_MAX = 64
 
@@ -279,6 +278,7 @@ class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str,
                  max_cached_terms: int = 2_000_000):
         self.dir = index_dir
+        self.spark = spark
         self.info = load_index_info(index_dir)
         self.term_stats: dict[str, tuple[int, int]] | None = None
         total_terms = 0
@@ -400,18 +400,28 @@ class IndexReader:
 
     def fingerprint(self) -> tuple:
         top = os.path.join(self.dir, "MANIFEST.json")
-        return (self.dir, os.path.getmtime(top))
+        return (self.dir, os.path.getmtime(top), self.spark)
 
 
 def get_reader(spark: SparkSession, index_dir: str) -> IndexReader:
     top = os.path.join(index_dir, "MANIFEST.json")
-    key = f"{index_dir}:{os.path.getmtime(top)}"
+    key = (index_dir, os.path.getmtime(top), spark)
     r = _READER_CACHE.get(key)
     if r is None:
         r = IndexReader(spark, index_dir)
-        _READER_CACHE.clear()  # keep at most a handful alive
+        for old in _READER_CACHE.values():  # keep one reader alive
+            if old._shadow_slices_df is not None:
+                _unpersist(old._shadow_slices_df)
+        _READER_CACHE.clear()
         _READER_CACHE[key] = r
     return r
+
+
+def _unpersist(df: DataFrame) -> None:
+    """Unpersist a cached frame; one whose session was stopped lost its
+    cache with it (and unpersisting it would raise)."""
+    if df.sparkSession.sparkContext._jsc is not None:
+        df.unpersist()
 
 
 def load_index_info(index_dir: str) -> dict:
@@ -533,243 +543,7 @@ def term_dfs(spark: SparkSession, info: dict, terms: list[str]) -> dict[str, int
     return {t: d for t, d in dfs.items() if d > 0}
 
 
-# ------------------------------------------------------------------ BMW core
-
-class _TermIter:
-    """Cursor over one (term, run) posting list of varbyte blocks.
-
-    Blocks decode lazily: `shallow_advance` moves the block pointer using
-    only (first/last doc_id, max_tf_norm) metadata; decode happens only when
-    a block must actually be scored.
-    """
-
-    __slots__ = (
-        "term", "idf", "firsts", "lasts", "maxs", "gaps", "tfs", "dls",
-        "bi", "docs", "tfa", "dla", "pos", "done", "global_ub", "shadow",
-        "doc_range", "allowed",
-    )
-
-    def __init__(self, term: str, idf: float, blocks: list[tuple], shadow=None,
-                 doc_range=None, allowed=None):
-        # blocks: (first, last, max_tf_norm, gaps, tfs, dls) sorted by first
-        # shadow: (lo, bytes) bitmap of doc_ids whose postings in this
-        # segment are stale (re-indexed by a newer segment) — masked on decode
-        # doc_range: [lo, hi) — this task's docID slice (doc-range query
-        # partitioning); docs outside are masked on decode
-        # allowed: (lo, bytes) bitmap of docs passing a stored-field filter
-        self.term = term
-        self.idf = idf
-        self.shadow = shadow
-        self.doc_range = doc_range
-        self.allowed = allowed
-        self.firsts = [b[0] for b in blocks]
-        self.lasts = [b[1] for b in blocks]
-        self.maxs = [b[2] for b in blocks]
-        self.gaps = [b[3] for b in blocks]
-        self.tfs = [b[4] for b in blocks]
-        self.dls = [b[5] for b in blocks]
-        self.bi = 0
-        self.done = False
-        self.global_ub = idf * max(self.maxs) if self.maxs else 0.0
-        self._load(0)
-
-    def _load(self, bi: int) -> None:
-        """Decode block bi (masking shadowed docs); skips empty-after-mask
-        blocks; sets done when no non-empty block remains."""
-        while bi < len(self.lasts):
-            docs = delta_decode(varbyte_decode(self.gaps[bi])).astype(np.int64)
-            tfa = varbyte_decode(self.tfs[bi]).astype(np.float64)
-            dla = varbyte_decode(self.dls[bi]).astype(np.float64)
-            keep = None
-            if self.doc_range is not None:
-                keep = (docs >= self.doc_range[0]) & (docs < self.doc_range[1])
-            if self.shadow is not None:
-                s = ~bitmap_contains(docs, self.shadow)
-                keep = s if keep is None else (keep & s)
-            if self.allowed is not None:
-                a = bitmap_contains(docs, self.allowed)
-                keep = a if keep is None else (keep & a)
-            if keep is not None and not keep.all():
-                docs, tfa, dla = docs[keep], tfa[keep], dla[keep]
-            if len(docs):
-                self.bi = bi
-                self.docs, self.tfa, self.dla = docs, tfa, dla
-                self.pos = 0
-                return
-            bi += 1
-        self.done = True
-
-    @property
-    def cur_doc(self) -> int:
-        return int(self.docs[self.pos])
-
-    def block_ub(self) -> float:
-        return self.idf * self.maxs[self.bi]
-
-    def block_last(self) -> int:
-        return self.lasts[self.bi]
-
-    def advance_to(self, target: int) -> None:
-        """Position at first doc >= target (shallow-skips whole blocks via
-        metadata; decodes only the landing block)."""
-        bi = self.bi
-        while bi < len(self.lasts) and self.lasts[bi] < target:
-            bi += 1
-        if bi >= len(self.lasts):
-            self.done = True
-            return
-        if bi != self.bi:
-            self._load(bi)
-            if self.done:
-                return
-        pos = int(np.searchsorted(self.docs, target))
-        if pos >= len(self.docs):
-            # block's real docs (post-mask) all < target → next block starts
-            # past this block's metadata `last` >= target, so pos 0 is right
-            self._load(self.bi + 1)
-            return
-        self.pos = pos
-
-    def score_current(self, avgdl: float) -> float:
-        tf = self.tfa[self.pos]
-        dl = self.dla[self.pos]
-        return self.idf * (tf * (BM25_K1 + 1.0)) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-        )
-
-
-class _TopK:
-    """Sorted top-k list ordered by (score desc, doc_id asc)."""
-
-    __slots__ = ("k", "items")
-
-    def __init__(self, k: int):
-        self.k = k
-        self.items: list[tuple[float, int]] = []  # kept sorted by (-score, doc)
-
-    def theta(self) -> float:
-        return self.items[-1][0] if len(self.items) >= self.k else float("-inf")
-
-    def offer(self, score: float, doc_id: int) -> None:
-        # candidates arrive in ascending doc_id → equal scores never replace
-        if len(self.items) < self.k or score > self.items[-1][0]:
-            insort(self.items, (score, doc_id), key=lambda it: (-it[0], it[1]))
-            if len(self.items) > self.k:
-                self.items.pop()
-
-
-def bmw_topk(
-    term_blocks: dict[str, list[tuple]],
-    term_df: dict[str, int],
-    N: int,
-    avgdl: float,
-    k: int,
-    conjunctive: bool = False,
-    doc_range: tuple[int, int] | None = None,
-    allowed: tuple[int, bytes] | None = None,
-) -> list[tuple[int, float]]:
-    """Block-max WAND over decoded-on-demand posting blocks of one query.
-
-    term_blocks: term -> list of runs, each run a pair
-                 (blocks=[(first, last, max_tf_norm, gaps, tfs, dls), ...],
-                  shadow=(lo, bytes) bitmap or None).
-    A term salted into multiple runs yields multiple iterators with the same
-    term (disjoint doc sets), which is transparent to WAND. `shadow` masks
-    doc_ids re-indexed by a newer segment (stale postings); `doc_range`
-    restricts scoring to this task's docID slice (doc-range partitioned
-    search — partial top-ks are merged exactly because every doc's FULL
-    score is computed inside its one owning slice); `allowed` restricts to
-    docs passing a stored-field filter (filter context: BM25 stats stay
-    corpus-global, as OpenSearch's non-scoring filter context does).
-    """
-    if not conjunctive:
-        # adaptive scorer cutover (round 6): block-max WAND skips decode
-        # work only when upper bounds can beat θ — the selective regime
-        # (rare terms, small volumes). Past ~64 KiB of packed docID gaps
-        # (≈50k+ postings) the Python pivot loop dominates and the exact
-        # vectorized TAAT path wins regardless of pruning potential; the
-        # gap-byte sum is a plan-time proxy the task already holds. Both
-        # scorers are bit-identical (see taat_topk); the threshold is a
-        # pure performance choice, env-overridable for measurement.
-        est_gap_bytes = sum(
-            len(b[3])
-            for runs in term_blocks.values()
-            for blocks, _ in runs
-            for b in blocks
-        )
-        if est_gap_bytes >= TAAT_MIN_GAP_BYTES:
-            return taat_topk(
-                term_blocks, term_df, N, avgdl, k, doc_range, allowed
-            )
-    iters: list[_TermIter] = []
-    n_query_terms = len(term_blocks)
-    for term, runs in term_blocks.items():
-        idf = bm25_idf(N, term_df[term])
-        for blocks, shadow in runs:
-            if blocks:
-                it = _TermIter(term, idf, blocks, shadow, doc_range, allowed)
-                if not it.done:
-                    iters.append(it)
-    if conjunctive:
-        if len({it.term for it in iters}) < n_query_terms:
-            return []  # a required term has no surviving postings here
-        return _conjunctive_topk(
-            term_blocks, term_df, N, avgdl, k, doc_range, allowed
-        )
-    if not iters:
-        return []
-
-    top = _TopK(k)
-    while True:
-        alive = [it for it in iters if not it.done]
-        if not alive:
-            break
-        # ---- disjunctive block-max WAND ----
-        alive.sort(key=lambda it: it.cur_doc)
-        theta = top.theta()
-        acc = 0.0
-        pivot_idx = -1
-        for i, it in enumerate(alive):
-            acc += it.global_ub
-            if acc > theta:
-                pivot_idx = i
-                break
-        if pivot_idx == -1:
-            break  # no doc can beat θ anymore
-        pivot_doc = alive[pivot_idx].cur_doc
-        if alive[0].cur_doc == pivot_doc:
-            # block-max refinement (BMW, Ding & Suel 2011): every alive
-            # iterator at doc <= pivot is exactly AT pivot (list is sorted
-            # and alive[0] == pivot), so the pivot's true score is bounded
-            # by the sum of the aligned iterators' current-block maxima.
-            prefix = [it for it in alive if it.cur_doc == pivot_doc]
-            block_sum = sum(it.block_ub() for it in prefix)
-            if block_sum <= theta:
-                # Safe skip: docs in (pivot, nxt) can only be scored by the
-                # prefix iterators inside their current blocks (bound =
-                # block_sum <= θ). nxt is capped by (a) the shallowest
-                # current-block boundary and (b) the first doc where a
-                # non-aligned iterator joins in.
-                nxt = min(it.block_last() for it in prefix) + 1
-                later = [it.cur_doc for it in alive if it.cur_doc > pivot_doc]
-                if later:
-                    nxt = min(nxt, min(later))
-                nxt = max(nxt, pivot_doc + 1)
-                for it in prefix:
-                    it.advance_to(nxt)
-                continue
-            contribs = sorted((it.term, it.score_current(avgdl)) for it in prefix)
-            total = 0.0
-            for _, c in contribs:
-                total += c
-            top.offer(total, pivot_doc)
-            for it in prefix:
-                it.advance_to(pivot_doc + 1)
-        else:
-            # advance the earliest iterator up to the pivot
-            alive[0].advance_to(pivot_doc)
-    return [(doc, score) for score, doc in top.items]
-
+# ------------------------------------------------------------------ scorer
 
 def _decode_term_arrays(
     term_blocks: dict[str, list[tuple]],
@@ -777,14 +551,16 @@ def _decode_term_arrays(
     allowed,
 ) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Decode every term's runs into one docID-sorted (docs, tfs, dls)
-    triple, applying the doc_range / shadow / allowed masks exactly as
-    _TermIter._load does. Shared by the conjunctive intersection and the
-    vectorized TAAT scorer (round 6)."""
+    triple, keeping only postings inside ``doc_range``, outside their run's
+    shadow bitmap and inside the ``allowed`` bitmap. A term whose runs hold
+    no blocks, or whose postings are all masked, decodes to empty arrays."""
     decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     for term, runs in term_blocks.items():
-        ds, ts, ls = [], [], []
+        ds = [np.empty(0, np.int64)]
+        ts = [np.empty(0, np.float64)]
+        ls = [np.empty(0, np.float64)]
         for blocks, shadow in runs:
-            for first, last, _mx, gaps, tfs, dls in blocks:
+            for _, _, _, gaps, tfs, dls in blocks:
                 d_ = delta_decode(varbyte_decode(gaps)).astype(np.int64)
                 t_ = varbyte_decode(tfs).astype(np.float64)
                 l_ = varbyte_decode(dls).astype(np.float64)
@@ -810,86 +586,72 @@ def _decode_term_arrays(
     return decoded
 
 
-def taat_topk(
+def bmw_topk(
     term_blocks: dict[str, list[tuple]],
     term_df: dict[str, int],
     N: int,
     avgdl: float,
     k: int,
+    conjunctive: bool = False,
     doc_range: tuple[int, int] | None = None,
     allowed: tuple[int, bytes] | None = None,
 ) -> list[tuple[int, float]]:
-    """Exact vectorized term-at-a-time top-k — the high-volume disjunctive
-    scorer (round 6, guide §4: no per-row Python in the hot path).
+    """Exact BM25 top-k of one query over its posting blocks, as
+    [(doc_id, score)] ranked (score desc, doc_id asc).
 
-    The Python WAND loop costs ~10 µs per pivot; on a task holding ~10⁶
-    postings of low-idf terms (where block-max bounds can't prune — every
-    doc is a candidate) that is tens of seconds, while this path is three
-    numpy passes (measured: 19 s → 0.6 s for a 3-head-term query over a 1M-
-    doc index). Bit-identical to bmw_topk by construction: contributions
-    use the same float64 expression with the same operand order as
-    _TermIter.score_current; per-doc summation order is ascending term
-    (terms concatenated sorted, stable doc sort, sequential reduceat —
-    exactly WAND's sorted-contribs loop); ranking is lexsort by
-    (score desc, doc asc), the same total order _TopK maintains. Decoding
-    everything it touches is the regime's floor: when nothing can be
-    pruned, lazy block skipping only adds bookkeeping."""
+    Named for the block-max WAND scorer it replaced (the search UDF and
+    perfbench's kernel timing call it by this name); it skips no block.
+
+    term_blocks: term -> list of runs, each run a pair
+                 (blocks=[(first, last, max_tf_norm, gaps, tfs, dls), ...],
+                  shadow=(lo, bytes) bitmap or None).
+    A term salted into multiple runs has disjoint doc sets per run. `shadow`
+    masks doc_ids re-indexed by a newer segment (stale postings); `doc_range`
+    restricts scoring to this task's docID slice (doc-range partitioned
+    search — partial top-ks are merged exactly because every doc's FULL
+    score is computed inside its one owning slice); `allowed` restricts to
+    docs passing a stored-field filter (filter context: BM25 stats stay
+    corpus-global, as OpenSearch's non-scoring filter context does).
+
+    Disjunctive queries are scored term-at-a-time in numpy passes: every
+    block is decoded, and each doc's total adds its terms' contributions
+    one term at a time in ascending term order, the order oracle.py sums in,
+    so scores match it bit for bit. Conjunctive queries intersect first
+    (_conjunctive_topk).
+    """
     decoded = _decode_term_arrays(term_blocks, doc_range, allowed)
-    parts_d: list[np.ndarray] = []
-    parts_c: list[np.ndarray] = []
+    if conjunctive:
+        return _conjunctive_topk(decoded, term_df, N, avgdl, k)
+    if not decoded:
+        return []
+    docs = np.unique(np.concatenate([d for d, _, _ in decoded.values()]))
+    total = np.zeros(docs.size, dtype=np.float64)
     for term in sorted(decoded):  # ascending term order = summation order
         d, tf, dl = decoded[term]
-        if d.size == 0:
-            continue
-        idf = bm25_idf(N, term_df[term])
-        contrib = idf * (tf * (BM25_K1 + 1.0)) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
+        # a doc occurs once per term, so the indexed add never repeats a slot
+        total[np.searchsorted(docs, d)] += bm25_term_score(
+            tf, dl, bm25_idf(N, term_df[term]), avgdl
         )
-        parts_d.append(d)
-        parts_c.append(contrib)
-    if not parts_d:
-        return []
-    D = np.concatenate(parts_d)
-    C = np.concatenate(parts_c)
-    order = np.argsort(D, kind="stable")
-    Ds, Cs = D[order], C[order]
-    seg = np.flatnonzero(np.concatenate(([True], Ds[1:] != Ds[:-1])))
-    # STRICT left-to-right segmented sum: np.add.reduceat reorders the
-    # addition (pairwise/SIMD) and drifts a ulp from WAND's sequential
-    # `total += c` — measured on a 3-term doc. Segments hold at most
-    # n_query_terms elements, so one vectorized add per position-in-segment
-    # reproduces the exact FP sequence.
-    lens = np.diff(np.append(seg, len(Ds)))
-    totals = Cs[seg].copy()
-    for j in range(1, int(lens.max())):
-        m = lens > j
-        totals[m] = totals[m] + Cs[seg[m] + j]
-    docs_u = Ds[seg]
-    top = np.lexsort((docs_u, -totals))[:k]
-    return [(int(docs_u[i]), float(totals[i])) for i in top]
+    # docs ascend, so a stable sort on -score breaks ties by doc_id asc
+    top = np.argsort(-total, kind="stable")[:k]
+    return [(int(docs[i]), float(total[i])) for i in top]
 
 
 def _conjunctive_topk(
-    term_blocks: dict[str, list[list[tuple]]],
+    decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]],
     term_df: dict[str, int],
     N: int,
     avgdl: float,
     k: int,
-    doc_range: tuple[int, int] | None = None,
-    allowed: tuple[int, bytes] | None = None,
 ) -> list[tuple[int, float]]:
     """Posting-list intersection (SURVEY.md §2 #20) + BM25 over survivors.
 
-    Sort-merge style: decode each term's runs into one docID-sorted array
-    (runs are disjoint), progressively intersect starting from the rarest
-    term (smallest list prunes fastest), then score the survivors.
-    Vectorized numpy throughout; exact and rank-identical by construction.
+    Progressively intersects the decoded docID arrays starting from the
+    rarest term (smallest list prunes fastest), then scores the survivors.
+    A required term with no surviving postings empties the result.
     """
-    decoded = _decode_term_arrays(term_blocks, doc_range, allowed)
-    for term in decoded:
-        if decoded[term][0].size == 0:
-            return []  # a required term fully shadowed → empty intersection
-
+    if not decoded or any(d.size == 0 for d, _, _ in decoded.values()):
+        return []
     terms_by_size = sorted(decoded, key=lambda t: len(decoded[t][0]))
     cand = decoded[terms_by_size[0]][0]
     for t in terms_by_size[1:]:
@@ -901,12 +663,10 @@ def _conjunctive_topk(
     for term in sorted(decoded):  # ascending term order = summation order
         d, tf, dl = decoded[term]
         pos = np.searchsorted(d, cand)
-        idf = bm25_idf(N, term_df[term])
-        tfc, dlc = tf[pos], dl[pos]
-        total += idf * (tfc * (BM25_K1 + 1.0)) / (
-            tfc + BM25_K1 * (1.0 - BM25_B + BM25_B * dlc / avgdl)
+        total += bm25_term_score(
+            tf[pos], dl[pos], bm25_idf(N, term_df[term]), avgdl
         )
-    order = np.lexsort((cand, -total))[:k]
+    order = np.argsort(-total, kind="stable")[:k]
     return [(int(cand[i]), float(total[i])) for i in order]
 
 
@@ -933,12 +693,6 @@ PARTIAL_SCHEMA = T.StructType(
 # postings a single scoring task may hold — bounds per-task memory/time for
 # head-term queries regardless of df (judge round-1 item #3)
 POSTINGS_PER_TASK = 2_000_000
-
-# packed-gap bytes per task above which the disjunctive scorer switches from
-# the Python block-max WAND loop to the exact vectorized TAAT path (round 6)
-TAAT_MIN_GAP_BYTES = int(
-    os.environ.get("OSLS_TAAT_MIN_GAP_BYTES", str(64 * 1024))
-)
 
 
 def search(
@@ -988,7 +742,7 @@ def search(
     # a query's text may be pre-tokenized (list of index terms) — used by
     # search-as-you-type, whose subfield terms ("pf:ha") must not re-tokenize.
     # Pre-tokenized lists are deduped order-preserving (ADVICE r2: duplicate
-    # (query_id, term) rows would double-score the term in WAND and feed
+    # (query_id, term) rows would double-score the term and feed
     # duplicate docIDs into intersect1d(assume_unique=True)); the string path
     # already dedupes inside query_terms.
     q_terms = {
@@ -1036,9 +790,9 @@ def search(
                 _allowed_ids_df(spark, info, doc_filter)
             ).persist()
             while len(_ALLOWED_SLICES_CACHE) >= 4:
-                _ALLOWED_SLICES_CACHE.pop(
-                    next(iter(_ALLOWED_SLICES_CACHE))
-                ).unpersist()
+                _unpersist(
+                    _ALLOWED_SLICES_CACHE.pop(next(iter(_ALLOWED_SLICES_CACHE)))
+                )
             _ALLOWED_SLICES_CACHE[cache_key] = allowed_slices
     elif doc_filter is not None:
         cache_key = (reader.fingerprint(), doc_filter)
@@ -1186,20 +940,11 @@ def search(
             joined = joined.unionByName(p)
         joined = joined.select(*unified_cols)
 
-    # Block-max bounds were computed with each segment's own avgdl at pack
-    # time. The idf-free score part is increasing in avgdl with ratio bounded
-    # by avgdl_query/avgdl_pack, so scaling stored bounds by
-    # max(1, global/segment) keeps them true upper bounds (safety of WAND
-    # pruning across segments).
-    seg_scale = {
-        m["segment"]: max(1.0, avgdl / m["avgdl"]) if m["avgdl"] else 1.0
-        for m in info["segments"]
-    }
     # LSM shadowing bitmaps come precomputed from the cached reader
     shadows = reader.shadows
     b_meta = spark.sparkContext.broadcast(
         {"dfs": dfs, "q_terms": q_terms, "q_k": q_k, "N": N, "avgdl": avgdl,
-         "conjunctive": conjunctive, "seg_scale": seg_scale,
+         "conjunctive": conjunctive,
          "shadows": shadows, "q_width": q_width, "max_doc": max_doc,
          "allowed": allowed, "emit_rank": single_chunk,
          "filter_active": doc_filter is not None and use_slices}
@@ -1251,7 +996,7 @@ def search(
                 (
                     int(row.first_doc_id),
                     int(row.last_doc_id),
-                    float(row.max_tf_norm) * meta["seg_scale"][row.segment],
+                    float(row.max_tf_norm),
                     bytes(row.doc_gaps),
                     bytes(row.tfs),
                     bytes(row.dls),

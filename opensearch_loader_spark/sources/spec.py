@@ -12,7 +12,6 @@
 from __future__ import annotations
 
 import logging
-import os
 
 logger = logging.getLogger(__name__)
 
@@ -68,15 +67,6 @@ def parse_env_value(value: str, expected_type: type):
     if expected_type is list:
         return [s.strip() for s in value.split(",") if s.strip()]
     return value
-
-
-def env_overrides(prefix: str = "OSLS_") -> dict:
-    """OS_LOADER_*-style env override map (config.py:47-64)."""
-    out = {}
-    for k, v in os.environ.items():
-        if k.startswith(prefix):
-            out[k[len(prefix):].lower()] = v
-    return out
 
 
 def load_about_pages(spark, path: str):

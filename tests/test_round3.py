@@ -369,6 +369,7 @@ def test_sharded_search_rank_identical(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(qe, "BITMAP_BROADCAST_MAX_DOC", 16)
     qe._READER_CACHE.clear()
     qe._ALLOWED_SLICES_CACHE.clear()
+    qe._PLAN_CACHE.clear()  # the plans above were built for broadcast mode
     reader = qe.get_reader(spark, d)
     assert reader.sharded
     # no O(max_doc) driver bitmaps in sharded mode

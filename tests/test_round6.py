@@ -231,85 +231,170 @@ class TestVarbyteTrailingEmptySegment:
         assert delta_decode_segments(gaps, lengths).tolist() == vals.tolist()
 
 
-class TestTaatWandIdentity:
-    def _term_blocks(self, n_docs=5000, seed=3):
-        """Real emit_blocks output for synthetic zipf-ish postings: several
-        terms with overlapping doc sets, multiple runs for one term."""
+def _bitmap(ids, n_docs):
+    """(lo, bytes) docID bitmap over [0, n_docs] with ``ids`` set."""
+    ids = np.asarray(sorted(ids), dtype=np.int64)
+    bm = np.zeros((n_docs + 8) // 8, np.uint8)
+    np.bitwise_or.at(bm, ids >> 3, (1 << (ids & 7)).astype(np.uint8))
+    return (0, bm.tobytes())
+
+
+class TestScorerMatchesReference:
+    """bmw_topk against a plain-Python per-doc BM25: contributions from
+    functions.bm25.bm25_term_score summed in ascending term order, ranked
+    (score desc, doc asc) as oracle.py does. Scores must match exactly."""
+
+    N_DOCS = 5000
+    AVGDL = 40.0
+
+    def _postings(self, seed=3):
+        """term -> [(docs, tfs, dls)] per run: zipf-ish overlapping terms,
+        "beta" split over two runs, and "tie" whose docs all have tf=2 and
+        dl=30 so their scores tie."""
+        rng = np.random.default_rng(seed)
+        out = {}
+        for term, df in [("alpha", 3000), ("beta", 1200), ("gamma", 150)]:
+            docs = np.sort(rng.choice(self.N_DOCS, size=df, replace=False))
+            tfs = rng.integers(1, 9, size=df)
+            dls = rng.integers(10, 90, size=df)
+            n_runs = 2 if term == "beta" else 1
+            out[term] = [
+                (docs[docs % n_runs == r], tfs[docs % n_runs == r],
+                 dls[docs % n_runs == r])
+                for r in range(n_runs)
+            ]
+        docs = np.sort(rng.choice(self.N_DOCS, size=40, replace=False))
+        out["tie"] = [(docs, np.full(40, 2), np.full(40, 30))]
+        return out
+
+    def _term_blocks(self, postings, shadows):
+        """Real emit_blocks 6-tuples per run; ``shadows`` maps (term, run)
+        to the docIDs masked as stale in that run."""
         from opensearch_loader_spark.indexer import emit_blocks
 
-        rng = np.random.default_rng(seed)
-        avgdl = 40.0
         tb = {}
-        dfs = {}
-        for term, df, runs in [
-            ("alpha", 3000, 1), ("beta", 1200, 2), ("gamma", 150, 1)
-        ]:
-            docs = np.sort(
-                rng.choice(n_docs, size=df, replace=False)
-            ).astype(np.uint64)
-            tfs = rng.integers(1, 9, size=df).astype(np.uint64)
-            dls = rng.integers(10, 90, size=df).astype(np.uint64)
-            runs_list = []
-            for r in range(runs):
-                m = (docs % runs) == r
+        for term, runs in postings.items():
+            tb[term] = []
+            for r, (docs, tfs, dls) in enumerate(runs):
                 rows = emit_blocks(
-                    term, r, docs[m], tfs[m], dls[m], avgdl, block_size=64
+                    term, r, docs.astype(np.uint64), tfs.astype(np.uint64),
+                    dls.astype(np.uint64), self.AVGDL, block_size=64,
                 )
                 blocks = [
                     (row[3], row[4], row[6], row[7], row[8], row[9])
                     for row in rows
                 ]
-                runs_list.append((blocks, None))
-            tb[term] = runs_list
-            dfs[term] = df
-        return tb, dfs, n_docs, avgdl
+                shadow = shadows.get((term, r))
+                tb[term].append(
+                    (blocks, _bitmap(shadow, self.N_DOCS) if shadow else None)
+                )
+        return tb
 
-    def test_taat_identical_to_wand_all_masks(self):
-        """taat_topk must be bit-identical to the Python block-max WAND —
-        scores, ranking, tie-breaks — under doc_range and allowed masks."""
-        from opensearch_loader_spark.query_engine import bmw_topk, taat_topk
-        import opensearch_loader_spark.query_engine as qe
-
-        tb, dfs, n_docs, avgdl = self._term_blocks()
-        allowed_ids = np.arange(0, n_docs, 3, dtype=np.int64)
-        size = (n_docs + 8) // 8
-        bm = np.zeros(size, np.uint8)
-        np.bitwise_or.at(
-            bm, allowed_ids >> 3, (1 << (allowed_ids & 7)).astype(np.uint8)
+    def _reference(self, postings, shadows, dfs, k, conjunctive=False,
+                   doc_range=None, allowed=None):
+        from opensearch_loader_spark.functions.bm25 import (
+            bm25_idf,
+            bm25_term_score,
         )
-        cases = [
-            dict(),
-            dict(doc_range=(1000, 4000)),
-            dict(allowed=(0, bm.tobytes())),
-            dict(doc_range=(500, 4500), allowed=(0, bm.tobytes())),
-        ]
-        old = qe.TAAT_MIN_GAP_BYTES
-        try:
+
+        live = {}
+        for term, runs in postings.items():
+            live[term] = {}
+            for r, (docs, tfs, dls) in enumerate(runs):
+                for d, tf, dl in zip(docs.tolist(), tfs.tolist(), dls.tolist()):
+                    if d in shadows.get((term, r), ()):
+                        continue
+                    if doc_range and not doc_range[0] <= d < doc_range[1]:
+                        continue
+                    if allowed is not None and d not in allowed:
+                        continue
+                    live[term][d] = (tf, dl)
+        doc_sets = [set(p) for p in live.values()]
+        cand = set.intersection(*doc_sets) if conjunctive else set.union(*doc_sets)
+        scores = {}
+        for term in sorted(live):
+            idf = bm25_idf(self.N_DOCS, dfs[term])
+            for d, (tf, dl) in live[term].items():
+                if d in cand:
+                    scores[d] = scores.get(d, 0.0) + bm25_term_score(
+                        tf, dl, idf, self.AVGDL
+                    )
+        return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+
+    def _check_all_masks(self, postings, conjunctive):
+        from opensearch_loader_spark.query_engine import bmw_topk
+
+        dfs = {t: sum(len(r[0]) for r in runs) for t, runs in postings.items()}
+        allowed = set(range(0, self.N_DOCS, 3))
+        beta_run1 = postings["beta"][1][0].tolist()
+        for shadows in ({}, {("beta", 1): set(beta_run1[::4])}):
+            tb = self._term_blocks(postings, shadows)
+            for masks in (
+                {},
+                {"doc_range": (1000, 4000)},
+                {"allowed": allowed},
+                {"doc_range": (500, 4500), "allowed": allowed},
+            ):
+                kw = dict(masks)
+                if "allowed" in kw:
+                    kw["allowed"] = _bitmap(allowed, self.N_DOCS)
+                for k in (5, 10, 100):
+                    got = bmw_topk(
+                        tb, dfs, self.N_DOCS, self.AVGDL, k,
+                        conjunctive=conjunctive, **kw,
+                    )
+                    want = self._reference(
+                        postings, shadows, dfs, k, conjunctive, **masks
+                    )
+                    assert want, (shadows, masks, k)
+                    assert got == want, (shadows, masks, k)
+
+    def test_disjunctive_all_masks(self):
+        self._check_all_masks(self._postings(), conjunctive=False)
+
+    def test_conjunctive_all_masks(self):
+        p = self._postings()
+        self._check_all_masks(
+            {t: p[t] for t in ("alpha", "beta", "gamma")}, conjunctive=True
+        )
+
+    def test_ties_rank_by_doc_id(self):
+        from opensearch_loader_spark.query_engine import bmw_topk
+
+        p = self._postings()
+        for terms, conj in (
+            (("tie",), False), (("gamma", "tie"), False), (("tie",), True)
+        ):
+            sub = {t: p[t] for t in terms}
+            dfs = {t: len(sub[t][0][0]) for t in terms}
+            tb = self._term_blocks(sub, {})
             for k in (5, 10, 100):
-                for kw in cases:
-                    qe.TAAT_MIN_GAP_BYTES = 1 << 60  # force the WAND loop
-                    w = bmw_topk(tb, dfs, n_docs, avgdl, k, **kw)
-                    t = taat_topk(tb, dfs, n_docs, avgdl, k, **kw)
-                    assert w == t, (k, kw)
-                    assert len(w) == min(k, len(w))
-        finally:
-            qe.TAAT_MIN_GAP_BYTES = old
+                got = bmw_topk(
+                    tb, dfs, self.N_DOCS, self.AVGDL, k, conjunctive=conj
+                )
+                want = self._reference(sub, {}, dfs, k, conjunctive=conj)
+                assert got == want, (terms, k)
+                by_score = {}
+                for d, s in got:
+                    by_score.setdefault(s, []).append(d)
+                ties = [ds for ds in by_score.values() if len(ds) > 1]
+                assert ties, (terms, k)
+                assert all(ds == sorted(ds) for ds in ties), (terms, k)
 
-    def test_dispatch_threshold(self):
-        """bmw_topk must route to TAAT above the gap-byte threshold and
-        still produce the same result."""
-        import opensearch_loader_spark.query_engine as qe
+    def test_term_with_empty_runs(self):
+        """A term whose runs hold no blocks contributes nothing to a
+        disjunctive query and empties a conjunctive one."""
+        from opensearch_loader_spark.query_engine import bmw_topk
 
-        tb, dfs, n_docs, avgdl = self._term_blocks()
-        old = qe.TAAT_MIN_GAP_BYTES
-        try:
-            qe.TAAT_MIN_GAP_BYTES = 1 << 60
-            w = qe.bmw_topk(tb, dfs, n_docs, avgdl, 10)
-            qe.TAAT_MIN_GAP_BYTES = 0
-            t = qe.bmw_topk(tb, dfs, n_docs, avgdl, 10)
-        finally:
-            qe.TAAT_MIN_GAP_BYTES = old
-        assert w == t
+        p = self._postings()
+        sub = {"alpha": p["alpha"]}
+        dfs = {"alpha": len(p["alpha"][0][0]), "zeta": 1}
+        tb = {**self._term_blocks(sub, {}), "zeta": [([], None)]}
+        got = bmw_topk(tb, dfs, self.N_DOCS, self.AVGDL, 10)
+        assert got == self._reference(sub, {}, dfs, 10)
+        assert bmw_topk(
+            tb, dfs, self.N_DOCS, self.AVGDL, 10, conjunctive=True
+        ) == []
 
 
 class TestSearchPlanReuse:
@@ -356,3 +441,34 @@ class TestSearchPlanReuse:
         assert sorted(map(tuple, f.collect())) == sorted(
             map(tuple, a.collect())
         )
+
+    def test_plans_and_readers_are_per_session(self, spark, tiny_index):
+        """A search from another session must not be served the plan cached
+        for the first: its DataFrame belongs to the calling session and
+        returns the same rows."""
+        from opensearch_loader_spark.query_engine import search
+
+        d, _ = tiny_index
+        q = [("q", "the data", 5)]
+        a = search(spark, d, q)
+        s2 = spark.newSession()
+        b = search(s2, d, q)
+        assert b is not a
+        assert b.sparkSession is s2
+        assert sorted(map(tuple, b.collect())) == sorted(
+            map(tuple, a.collect())
+        )
+
+    def test_evicted_reader_unpersists_its_shadow_slices(
+        self, spark, tiny_index
+    ):
+        from opensearch_loader_spark.query_engine import get_reader
+
+        d, _ = tiny_index
+        reader = get_reader(spark, d)
+        slices = spark.range(3).persist()
+        slices.count()
+        reader._shadow_slices_df = slices
+        assert get_reader(spark.newSession(), d) is not reader
+        assert not slices.storageLevel.useMemory
+        assert not slices.storageLevel.useDisk
