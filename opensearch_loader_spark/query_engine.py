@@ -17,6 +17,13 @@ exact merge of the per-chunk top-ks (each doc is scored fully in its one
 owning chunk). The UDF decodes every varbyte block it receives; the
 per-block max_tf_norm metadata is stored but not used to skip blocks.
 
+State: one IndexReader snapshot per index version, held in the module's one
+slot (get_reader) and keyed by (session, index dir, manifest bytes), owns
+everything derived from that version — term stats, both tombstone
+transports, allowed-docs sets, compiled plans and the segment unions. The
+writers (compaction, delta segments) read the same snapshot. Replacing it
+unpersists every frame it persisted.
+
 Determinism (rank-identity with the oracle): float64; per-doc score sums
 per-term contributions in ascending term order; tie-break (score desc,
 doc_id asc) — see oracle.py ordering.
@@ -26,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
@@ -180,8 +188,9 @@ def slice_map(slice_rows) -> "dict[int, np.ndarray] | None":
     """[(slice_id, bm)] → {slice_id: uint8 array} probed directly by
     bitmap_contains — NO contiguous min-to-max assembly, so a task whose
     slices are sparse across a huge docID span holds only the slices it was
-    shipped (ADVICE r4; replaces assemble_slices in the scoring path).
-    Absent slices are 'no bits set', exactly as assemble_slices' zero-fill."""
+    shipped (ADVICE r4). Absent slices are 'no bits set': every docID a task
+    probes lies inside a block range whose slices were requested, so a
+    missing slice means no doc there qualifies."""
     out: dict[int, np.ndarray] = {}
     for sid, bm in slice_rows:
         a = np.frombuffer(bytes(bm), np.uint8)
@@ -190,248 +199,296 @@ def slice_map(slice_rows) -> "dict[int, np.ndarray] | None":
     return out or None
 
 
-def assemble_slices(slice_rows) -> "tuple[int, bytes] | None":
-    """[(slice_id, bm)] → one contiguous (lo, bytes) bitmap spanning the
-    present slices (gaps zero-filled). Absent slices are correctly 'no bits
-    set': every docID a task probes lies inside a block range whose slices
-    were requested, so a missing slice means no doc there qualifies."""
-    rows = list(slice_rows)
-    if not rows:
-        return None
-    sids = [int(s) for s, _ in rows]
-    lo_sid, hi_sid = min(sids), max(sids)
-    width = SLICE_DOCS // 8
-    out = np.zeros((hi_sid - lo_sid + 1) * width, np.uint8)
-    for sid, bm in rows:
-        off = (int(sid) - lo_sid) * width
-        out[off : off + width] |= np.frombuffer(bytes(bm), np.uint8)
-    return (lo_sid * SLICE_DOCS, out.tobytes())
-
-
 # --------------------------------------------------------------- index access
 
-# readers keyed (index dir, MANIFEST mtime, SparkSession): every plan and
-# persisted frame a reader derives is bound to the session that built it
-_READER_CACHE: dict[tuple, "IndexReader"] = {}
+# The module's one state slot: the IndexReader snapshot of the index version
+# read last (get_reader). Every plan, bitmap and persisted frame derived from
+# an index version lives on its snapshot and goes when the snapshot does.
+_SNAPSHOT: "IndexReader | None" = None
 
-# allowed-docs bitmaps keyed (index fingerprint, doc_filter predicate) — a
-# repeated stored-field filter reuses its bitmap instead of re-scanning every
-# segment's docs table per query
-_ALLOWED_CACHE: dict[tuple, "tuple[int, bytes] | None"] = {}
-
-# sharded-mode analogue: persisted DataFrames of allowed-bitmap SLICES
-_ALLOWED_SLICES_CACHE: dict[tuple, DataFrame] = {}
-
-# compiled-plan cache (round 6): repeated identical searches reuse the
-# ANALYZED DataFrame — the prepared-statement pattern. Measured: executing a
-# reused plan takes ~0.18 s where a freshly built one pays ~0.4 s of
-# Catalyst analysis/optimization + py4j plan construction on top. This
-# caches no data and no results: every collect re-executes the plan against
-# the parquet files; the key embeds the index fingerprint (MANIFEST mtime
-# and session), so a rebuilt index or another session can never be served
-# a stale plan. Bounded FIFO.
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
-_PLAN_CACHE_MAX = 64
+# term-stats rows a snapshot collects to the driver at most; past that, dfs
+# are read per query (term_dfs) — the vocab of a 10^12-doc corpus does not
+# fit a driver
+MAX_CACHED_TERMS = 2_000_000
+# entries a snapshot keeps in its plan and allowed-docs memos (oldest goes
+# first): bounds driver residency under many distinct queries or filters
+PLAN_MEMO_MAX = 64
+ALLOWED_MEMO_MAX = 8
+# tables only delta segments write; segment_union skips segments without them
+_DELTA_TABLES = ("updated_ids", "df_neg")
 
 
-def _allowed_ids_df(spark: SparkSession, info: dict, doc_filter: str) -> DataFrame:
-    """Distributed allowed-docs set for a stored-field predicate: per
-    segment, docs passing the filter minus docs re-indexed by any NEWER
-    segment (so stale field values can't admit a doc) — the relational
-    equivalent of the collected-bitmap path's per-segment AND-NOT, with the
-    predicate pushed down to each docs scan and anti-joins on the (small)
-    updated_ids tables. Never collected."""
-    segs = [m["segment"] for m in info["segments"]]
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def segment_union(
+    spark: SparkSession, info: dict, table: str,
+    segments: list[str] | None = None,
+    name_col: str | None = None,
+    rank_col: str | None = None,
+) -> "DataFrame | None":
+    """One relation over ``table`` of the live ``segments`` (default: every
+    segment of ``info``), each scan tagged, when asked, with its segment's
+    name (``name_col``) and its age rank, 0 = oldest (``rank_col``).
+    Segments without a delta-only table are skipped; None when none has it.
+    Filters and column pruning push through the union into every scan."""
+    live = [m["segment"] for m in info["segments"]]
     parts = []
-    for i, m in enumerate(info["segments"]):
-        p = os.path.join(info["dir"], "segments", m["segment"], "docs")
-        d = spark.read.parquet(p).filter(doc_filter).select("doc_id")
-        newer = []
-        for s in segs[i + 1:]:
-            up = os.path.join(info["dir"], "segments", s, "updated_ids")
-            if os.path.isdir(up):
-                newer.append(spark.read.parquet(up))
-        if newer:
-            u = newer[0]
-            for x in newer[1:]:
-                u = u.unionByName(x)
-            d = d.join(u.distinct(), "doc_id", "left_anti")
-        parts.append(d)
-    out = parts[0]
-    for d in parts[1:]:
-        out = out.unionByName(d)
-    return out
+    for seg in live if segments is None else segments:
+        p = os.path.join(info["dir"], "segments", seg, table)
+        if table in _DELTA_TABLES and not os.path.isdir(p):
+            continue
+        df = spark.read.parquet(p)
+        if name_col:
+            df = df.withColumn(name_col, F.lit(seg))
+        if rank_col:
+            df = df.withColumn(rank_col, F.lit(live.index(seg)))
+        parts.append(df)
+    return _union_all(parts) if parts else None
+
+
+def _term_rows(spark: SparkSession, info: dict) -> DataFrame:
+    """(term, df, bucket): every segment's term_stats rows plus each delta's
+    df_neg rows negated (the df of the docs it shadowed), so the sum per
+    term is its exact live df under updates."""
+    rows = segment_union(spark, info, "term_stats").select("term", "df", "bucket")
+    neg = segment_union(spark, info, "df_neg")
+    if neg is None:
+        return rows
+    return rows.unionByName(
+        neg.select("term", (-F.col("df_neg")).alias("df"), "bucket")
+    )
+
+
+def _release(v) -> None:
+    """Unpersist ``v`` if it is a persisted frame. A frame whose session was
+    stopped lost its cache with it (and unpersisting it would raise)."""
+    if (
+        isinstance(v, DataFrame) and v.is_cached
+        and v.sparkSession.sparkContext._jsc is not None
+    ):
+        v.unpersist()
+
+
+def _memo(table: dict, key, build, cap: int):
+    """``table[key]``, built on first use. When full, the oldest entry goes
+    first, unpersisted if it is a persisted frame."""
+    if key not in table:
+        while len(table) >= cap:
+            _release(table.pop(next(iter(table))))
+        table[key] = build()
+    return table[key]
 
 
 class IndexReader:
-    """Driver-side cached view of an index: manifests, term→(df, bucket)
-    stats, and per-segment shadow sets. Loading these once per index turns a
-    query into a single Spark job (blocks scan → per-query applyInPandas).
+    """The snapshot of one index version: its manifests and everything
+    derived from them. Each piece loads on first use, so a caller pays only
+    for what it reads (a writer that unions the docs tables never collects
+    term stats):
 
-    Scale notes: the term-stats dict is collected to the driver only when the
-    vocabulary is small enough (`max_cached_terms`); past that, stats fall
-    back to per-query filtered reads (the vocab of a 10^12-doc corpus does
-    not fit a driver). Shadow sets (doc_ids re-indexed by newer segments) are
-    packed BITMAPS built map-side — driver/broadcast cost is 1 bit per doc of
-    addressed range, not 8 bytes per updated doc (judge round-1 item #8)."""
+    - ``term_stats``: term → (df, bucket), in one bounded collect; None
+      past MAX_CACHED_TERMS rows (queries then read dfs per query);
+    - tombstones — per segment, the doc_ids newer segments re-indexed — in
+      both transports: ``shadows``, packed driver bitmaps at 1 bit per doc
+      of addressed range (judge round-1 item #8), used up to
+      BITMAP_BROADCAST_MAX_DOC, and ``shadow_slices``, a persisted frame of
+      doc-range slices above it (``sharded``);
+    - ``allowed(doc_filter)``: the allowed-docs set of a stored-field
+      predicate, in the same transport;
+    - ``plan(key, build)``: search()'s compiled-plan memo;
+    - ``segment_union(table, ...)``: one relation over a table of every
+      live segment; ``blocks_union`` is the postings one.
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 max_cached_terms: int = 2_000_000):
-        self.dir = index_dir
+    get_reader holds one snapshot, keyed by (session, index dir, manifest
+    bytes); replacing it calls close(), which unpersists every frame the
+    snapshot persisted, so no derived state outlives its index version or
+    its session."""
+
+    def __init__(self, spark: SparkSession, index_dir: str):
+        raw = _read_manifests(index_dir)
+        self.key = (spark, index_dir, raw)
         self.spark = spark
-        self.info = load_index_info(index_dir)
-        self.term_stats: dict[str, tuple[int, int]] | None = None
-        total_terms = 0
-        stats: dict[str, tuple[int, int]] = {}
-        for seg in self.info["segments"]:
-            p = os.path.join(index_dir, "segments", seg["segment"], "term_stats")
-            df = spark.read.parquet(p)
-            total_terms += df.count()
-            if total_terms > max_cached_terms:
-                stats = {}
-                break
-            for r in df.collect():
-                df_prev = stats.get(r["term"], (0, r["bucket"]))[0]
-                stats[r["term"]] = (df_prev + int(r["df"]), int(r["bucket"]))
-        if stats:
-            # subtract each delta's df_neg (df of the docs it shadowed) so
-            # cached dfs are exact under updates — mirrors term_dfs()
-            for seg in self.info["segments"]:
-                neg = os.path.join(
-                    index_dir, "segments", seg["segment"], "df_neg"
-                )
-                if os.path.isdir(neg):
-                    for r in spark.read.parquet(neg).collect():
-                        if r["term"] in stats:
-                            d, bkt = stats[r["term"]]
-                            d -= int(r["df_neg"])
-                            if d > 0:
-                                stats[r["term"]] = (d, bkt)
-                            else:
-                                del stats[r["term"]]
-        self.term_stats = stats or None
-        # per-segment shadow bitmaps (doc_ids re-indexed by newer segments),
-        # all in one [0, max_doc] space so they can be OR-ed per segment.
-        # SHARDED mode (max_doc above the broadcast threshold): no driver
-        # bitmaps at all — shadows become a DataFrame of doc-range SLICES
-        # built lazily (shadow_slices) and joined to scoring tasks.
-        seg_order = [m["segment"] for m in self.info["segments"]]
+        self.dir = index_dir
+        self.info = _parse_info(index_dir, raw)
+        self.segments = [m["segment"] for m in self.info["segments"]]
         self.max_doc = max_doc_of(self.info)
         self.sharded = self.max_doc > BITMAP_BROADCAST_MAX_DOC
-        self._updated_segs = [
-            seg for seg in seg_order[1:]
-            if os.path.isdir(os.path.join(index_dir, "segments", seg, "updated_ids"))
-        ]
-        self.shadows: dict[str, tuple[int, bytes] | None] = {
-            seg: None for seg in seg_order
-        }
-        self._shadow_slices_df: DataFrame | None = None
-        self._blocks_union: DataFrame | None = None
-        if not self.sharded:
-            upd: dict[str, tuple[int, bytes]] = {}
-            for seg in self._updated_segs:
-                p = os.path.join(index_dir, "segments", seg, "updated_ids")
-                bm = collect_docid_bitmap(
-                    spark.read.parquet(p), 0, self.max_doc
-                )
-                if bm is not None:
-                    upd[seg] = bm
-            for i, seg in enumerate(seg_order):
-                newer = [upd[s] for s in seg_order[i + 1:] if s in upd]
-                self.shadows[seg] = bitmap_union(newer) if newer else None
+        self._allowed: dict = {}
+        self._plans: dict = {}
 
-    def has_shadows(self) -> bool:
-        return bool(self._updated_segs)
+    def segment_union(self, table: str, **kw) -> "DataFrame | None":
+        return segment_union(self.spark, self.info, table, **kw)
 
-    def shadow_slices(self, spark: SparkSession) -> "DataFrame | None":
-        """(segment, slice_id, bm) — for each LIVE segment, the sliced bitmap
-        of doc_ids that NEWER segments re-indexed (its stale postings). Built
-        once per reader, persisted; only used in sharded mode."""
-        if not self._updated_segs:
+    @cached_property
+    def term_stats(self) -> "dict[str, tuple[int, int]] | None":
+        rows = (
+            _term_rows(self.spark, self.info)
+            .limit(MAX_CACHED_TERMS + 1).collect()
+        )
+        if len(rows) > MAX_CACHED_TERMS:
             return None
-        if self._shadow_slices_df is None:
-            seg_order = [m["segment"] for m in self.info["segments"]]
-            parts = []
-            for i, seg in enumerate(seg_order):
-                newer = [s for s in seg_order[i + 1:] if s in self._updated_segs]
-                if not newer:
-                    continue
-                ids = None
-                for s in newer:
-                    p = os.path.join(self.dir, "segments", s, "updated_ids")
-                    d = spark.read.parquet(p)
-                    ids = d if ids is None else ids.unionByName(d)
-                parts.append(
-                    docid_bitmap_slices(ids.distinct()).withColumn(
-                        "segment", F.lit(seg)
-                    )
-                )
-            out = parts[0]
-            for d in parts[1:]:
-                out = out.unionByName(d)
-            self._shadow_slices_df = out.persist()
-        return self._shadow_slices_df
+        stats: dict[str, tuple[int, int]] = {}
+        for r in rows:
+            prev = stats.get(r["term"], (0, 0))[0]
+            stats[r["term"]] = (prev + int(r["df"]), int(r["bucket"]))
+        return {t: v for t, v in stats.items() if v[0] > 0} or None
 
-    def blocks_union(self, spark: SparkSession) -> DataFrame:
-        """Unioned per-segment postings relation, built once per reader
-        (round 6): re-creating it per query repeated the parquet file
-        listing + schema resolution on the driver for every search call.
-        Only the PLAN is reused — nothing is persisted; every query still
-        reads its blocks from parquet at execution time, and per-query
-        bucket/term filters push down through the union into each scan
-        exactly as before (readers are evicted on MANIFEST mtime change,
-        so a rebuilt index never serves a stale file list)."""
-        if self._blocks_union is None:
-            parts = []
-            for seg in self.info["segments"]:
-                p = os.path.join(
-                    self.dir, "segments", seg["segment"], "postings"
-                )
-                parts.append(
-                    spark.read.parquet(p).withColumn(
-                        "segment", F.lit(seg["segment"])
-                    )
-                )
-            out = parts[0]
-            for df in parts[1:]:
-                out = out.unionByName(df)
-            self._blocks_union = out
-        return self._blocks_union
+    @cached_property
+    def blocks_union(self) -> DataFrame:
+        """The postings union, tagged by segment (round 6): building it per
+        query repeated the parquet file listing and schema resolution on
+        the driver for every search. Only the PLAN is reused; every query
+        still reads its blocks from parquet, and its bucket/term filters
+        push down through the union into each scan."""
+        return self.segment_union("postings", name_col="segment")
 
-    def fingerprint(self) -> tuple:
-        top = os.path.join(self.dir, "MANIFEST.json")
-        return (self.dir, os.path.getmtime(top), self.spark)
+    @cached_property
+    def shadowed(self) -> list[str]:
+        """Live segments, oldest first, whose docs some newer segment
+        re-indexed."""
+        upd = [
+            os.path.isdir(os.path.join(self.dir, "segments", s, "updated_ids"))
+            for s in self.segments
+        ]
+        return [s for i, s in enumerate(self.segments) if any(upd[i + 1:])]
+
+    def _newer_ids(self, seg: str) -> DataFrame:
+        """doc_ids re-indexed by segments newer than ``seg`` (shadowed)."""
+        i = self.segments.index(seg)
+        return self.segment_union(
+            "updated_ids", segments=self.segments[i + 1:]
+        ).distinct()
+
+    @cached_property
+    def shadows(self) -> "dict[str, tuple[int, bytes] | None]":
+        """segment → driver bitmap of its shadowed doc_ids, all in one
+        [0, max_doc] space so they OR per segment; all None when sharded."""
+        upd = {}
+        if not self.sharded:
+            for s in self.segments[1:]:
+                ids = self.segment_union("updated_ids", segments=[s])
+                if ids is not None:
+                    upd[s] = collect_docid_bitmap(ids, 0, self.max_doc)
+        return {
+            s: bitmap_union([upd.get(x) for x in self.segments[i + 1:]])
+            for i, s in enumerate(self.segments)
+        }
+
+    @cached_property
+    def shadow_slices(self) -> "DataFrame | None":
+        """(slice_id, bm, segment): per shadowed segment, the sliced bitmap
+        of its shadowed doc_ids. Persisted; the sharded transport."""
+        parts = [
+            docid_bitmap_slices(self._newer_ids(s)).withColumn(
+                "segment", F.lit(s)
+            )
+            for s in self.shadowed
+        ]
+        return _union_all(parts).persist() if parts else None
+
+    def allowed(self, doc_filter: str):
+        """Exact allowed-docs set of a stored-field predicate: per segment,
+        the docs passing it minus that segment's shadowed docs (so a
+        re-indexed doc's OLD field values can't admit it). A (lo, bytes)
+        driver bitmap, or None when no doc passes; when sharded, a persisted
+        frame of (slice_id, bm) slices, never collected. Memoized per
+        predicate: a repeated filter scans no docs table after its first
+        query (VERDICT r2 item 4)."""
+        return _memo(
+            self._allowed, doc_filter,
+            lambda: (
+                self._allowed_slices(doc_filter) if self.sharded
+                else self._allowed_bitmap(doc_filter)
+            ),
+            ALLOWED_MEMO_MAX,
+        )
+
+    def _allowed_bitmap(self, doc_filter: str):
+        maps = []
+        for s in self.segments:
+            docs = self.segment_union("docs", segments=[s]).filter(doc_filter)
+            bm = collect_docid_bitmap(docs, 0, self.max_doc)
+            shadow = self.shadows[s]
+            if bm is not None and shadow is not None:
+                a = np.frombuffer(bm[1], np.uint8) & ~np.frombuffer(
+                    shadow[1], np.uint8
+                )
+                bm = (bm[0], a.tobytes())
+            maps.append(bm)
+        return bitmap_union(maps)
+
+    def _allowed_slices(self, doc_filter: str) -> DataFrame:
+        # the predicate is pushed down to each docs scan; the anti-joins
+        # read only the (small) updated_ids tables
+        parts = []
+        for s in self.segments:
+            d = self.segment_union("docs", segments=[s])
+            d = d.filter(doc_filter).select("doc_id")
+            if s in self.shadowed:
+                d = d.join(self._newer_ids(s), "doc_id", "left_anti")
+            parts.append(d)
+        return docid_bitmap_slices(_union_all(parts)).persist()
+
+    def plan(self, key, build) -> DataFrame:
+        """search()'s compiled-plan memo (round 6): a repeated identical
+        search reuses the ANALYZED DataFrame — the prepared-statement
+        pattern. Measured: executing a reused plan takes ~0.18 s where a
+        freshly built one pays ~0.4 s of Catalyst analysis/optimization and
+        py4j plan construction on top. It caches plans, never data or
+        results: every collect re-executes the plan against the parquet
+        files, and the memo goes with its snapshot."""
+        return _memo(self._plans, key, build, PLAN_MEMO_MAX)
+
+    def close(self) -> None:
+        """Unpersist every frame this snapshot persisted."""
+        for v in (self.__dict__.get("shadow_slices"), *self._allowed.values()):
+            _release(v)
 
 
 def get_reader(spark: SparkSession, index_dir: str) -> IndexReader:
-    top = os.path.join(index_dir, "MANIFEST.json")
-    key = (index_dir, os.path.getmtime(top), spark)
-    r = _READER_CACHE.get(key)
-    if r is None:
-        r = IndexReader(spark, index_dir)
-        for old in _READER_CACHE.values():  # keep one reader alive
-            if old._shadow_slices_df is not None:
-                _unpersist(old._shadow_slices_df)
-        _READER_CACHE.clear()
-        _READER_CACHE[key] = r
-    return r
+    """The snapshot of ``index_dir``'s current version for ``spark``. The
+    key holds the bytes of MANIFEST.json and of every listed segment
+    manifest — each build writes a fresh build_id — so any rewrite of the
+    index misses, whatever the file times say."""
+    global _SNAPSHOT
+    key = (spark, index_dir, _read_manifests(index_dir))
+    if _SNAPSHOT is None or _SNAPSHOT.key != key:
+        drop_reader()
+        _SNAPSHOT = IndexReader(spark, index_dir)
+    return _SNAPSHOT
 
 
-def _unpersist(df: DataFrame) -> None:
-    """Unpersist a cached frame; one whose session was stopped lost its
-    cache with it (and unpersisting it would raise)."""
-    if df.sparkSession.sparkContext._jsc is not None:
-        df.unpersist()
+def drop_reader() -> None:
+    """Close and forget the held snapshot."""
+    global _SNAPSHOT
+    if _SNAPSHOT is not None:
+        _SNAPSHOT.close()
+    _SNAPSHOT = None
+
+
+def _read_manifests(index_dir: str) -> tuple[bytes, ...]:
+    """The bytes of MANIFEST.json, then of each listed segment's
+    manifest.json: the identity of one index version."""
+    with open(os.path.join(index_dir, "MANIFEST.json"), "rb") as f:
+        top = f.read()
+    raw = [top]
+    for seg in json.loads(top)["segments"]:
+        with open(os.path.join(index_dir, "segments", seg, "manifest.json"), "rb") as f:
+            raw.append(f.read())
+    return tuple(raw)
 
 
 def load_index_info(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "MANIFEST.json")) as f:
-        top = json.load(f)
+    return _parse_info(index_dir, _read_manifests(index_dir))
+
+
+def _parse_info(index_dir: str, raw: tuple[bytes, ...]) -> dict:
+    top = json.loads(raw[0])
     segs = []
     N, dl_sum = 0, 0.0
-    for seg in top["segments"]:
-        with open(os.path.join(index_dir, "segments", seg, "manifest.json")) as f:
-            m = json.load(f)
+    for b in raw[1:]:
+        m = json.loads(b)
         segs.append(m)
         # a delta segment's re-indexed docs are already counted in the base
         # segment → subtract to keep N exact. avgdl is exact too when the
@@ -487,24 +544,11 @@ def read_query_blocks(
     per-query file listing."""
     if buckets is None:
         buckets = sorted(set(_bucket_of(spark, terms, info["n_buckets"]).values()))
-    if base is not None:
-        return base.filter(F.col("bucket").isin(buckets)).filter(
-            F.col("term").isin(terms)
-        )
-    parts = []
-    for seg in info["segments"]:
-        p = os.path.join(info["dir"], "segments", seg["segment"], "postings")
-        df = (
-            spark.read.parquet(p)
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .withColumn("segment", F.lit(seg["segment"]))
-        )
-        parts.append(df)
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionByName(df)
-    return out
+    if base is None:
+        base = segment_union(spark, info, "postings", name_col="segment")
+    return base.filter(F.col("bucket").isin(buckets)).filter(
+        F.col("term").isin(terms)
+    )
 
 
 def term_dfs(spark: SparkSession, info: dict, terms: list[str]) -> dict[str, int]:
@@ -520,26 +564,14 @@ def term_dfs(spark: SparkSession, info: dict, terms: list[str]) -> dict[str, int
         return {}
     dfs: dict[str, int] = {}
     buckets = sorted(set(_bucket_of(spark, terms, info["n_buckets"]).values()))
-    for seg in info["segments"]:
-        p = os.path.join(info["dir"], "segments", seg["segment"], "term_stats")
-        rows = (
-            spark.read.parquet(p)
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .collect()
-        )
-        for r in rows:
-            dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
-        neg = os.path.join(info["dir"], "segments", seg["segment"], "df_neg")
-        if os.path.isdir(neg):
-            rows = (
-                spark.read.parquet(neg)
-                .filter(F.col("bucket").isin(buckets))
-                .filter(F.col("term").isin(terms))
-                .collect()
-            )
-            for r in rows:
-                dfs[r["term"]] = dfs.get(r["term"], 0) - int(r["df_neg"])
+    rows = (
+        _term_rows(spark, info)
+        .filter(F.col("bucket").isin(buckets))
+        .filter(F.col("term").isin(terms))
+        .collect()
+    )
+    for r in rows:
+        dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
     return {t: d for t, d in dfs.items() if d > 0}
 
 
@@ -725,20 +757,32 @@ def search(
     corpus-global). Implemented as an exact allowed-docs bitmap built from
     the docs tables with the predicate pushed down to parquet; at 10^12
     docs the bitmap would be sharded by the same doc-range chunks.
+
+    The plan is memoized on the index snapshot (IndexReader.plan): an
+    identical repeated search returns the same DataFrame.
     """
     reader = get_reader(spark, index_dir)
-    info = reader.info
-    plan_key = (
-        reader.fingerprint(),
+    key = (
         tuple(
             (qid, text if isinstance(text, str) else tuple(text), k)
             for qid, text, k in queries
         ),
         conjunctive, hydrate, doc_filter, postings_per_task,
     )
-    cached = _PLAN_CACHE.get(plan_key)
-    if cached is not None:
-        return cached
+    return reader.plan(key, lambda: _search_plan(
+        reader, queries, conjunctive, hydrate, doc_filter, postings_per_task
+    ))
+
+
+def _search_plan(
+    reader: IndexReader,
+    queries: list[tuple[str, str, int]],
+    conjunctive: bool,
+    hydrate: bool,
+    doc_filter: str | None,
+    postings_per_task: int,
+) -> DataFrame:
+    spark, info = reader.spark, reader.info
     # a query's text may be pre-tokenized (list of index terms) — used by
     # search-as-you-type, whose subfield terms ("pf:ha") must not re-tokenize.
     # Pre-tokenized lists are deduped order-preserving (ADVICE r2: duplicate
@@ -773,55 +817,23 @@ def search(
     # driver or broadcast whole — they travel as doc-range SLICES shuffled to
     # exactly the (query_id, chunk) tasks whose posting blocks overlap them.
     use_slices = reader.sharded and (
-        doc_filter is not None or reader.has_shadows()
+        doc_filter is not None or bool(reader.shadowed)
     )
 
-    # stored-field filter → exact allowed-docs bitmap (per segment, with that
-    # segment's shadow subtracted so a re-indexed doc's OLD field values
-    # can't admit it). Cached per (index fingerprint, predicate): a repeated
-    # filter costs zero docs scans after the first query (VERDICT r2 item 4).
+    # stored-field filter → the snapshot's exact allowed-docs set: a driver
+    # bitmap, or a slice frame in sharded mode
     allowed = None
     allowed_slices = None
     if doc_filter is not None and use_slices:
-        cache_key = (reader.fingerprint(), doc_filter, "slices")
-        allowed_slices = _ALLOWED_SLICES_CACHE.get(cache_key)
-        if allowed_slices is None:
-            allowed_slices = docid_bitmap_slices(
-                _allowed_ids_df(spark, info, doc_filter)
-            ).persist()
-            while len(_ALLOWED_SLICES_CACHE) >= 4:
-                _unpersist(
-                    _ALLOWED_SLICES_CACHE.pop(next(iter(_ALLOWED_SLICES_CACHE)))
-                )
-            _ALLOWED_SLICES_CACHE[cache_key] = allowed_slices
+        allowed_slices = reader.allowed(doc_filter)
     elif doc_filter is not None:
-        cache_key = (reader.fingerprint(), doc_filter)
-        if cache_key in _ALLOWED_CACHE:
-            allowed = _ALLOWED_CACHE[cache_key]
-        else:
-            seg_maps = []
-            for m in info["segments"]:
-                p = os.path.join(index_dir, "segments", m["segment"], "docs")
-                bm = collect_docid_bitmap(
-                    spark.read.parquet(p).filter(doc_filter), 0, reader.max_doc
-                )
-                shadow = reader.shadows.get(m["segment"])
-                if bm is not None and shadow is not None:
-                    a = np.frombuffer(bm[1], np.uint8) & ~np.frombuffer(
-                        shadow[1], np.uint8
-                    )
-                    bm = (bm[0], a.tobytes())
-                seg_maps.append(bm)
-            allowed = bitmap_union(seg_maps)
-            while len(_ALLOWED_CACHE) >= 8:  # bound driver residency
-                _ALLOWED_CACHE.pop(next(iter(_ALLOWED_CACHE)))
-            _ALLOWED_CACHE[cache_key] = allowed
+        allowed = reader.allowed(doc_filter)
         if allowed is None:
             return spark.createDataFrame([], TOPK_SCHEMA)
 
     blocks = read_query_blocks(
         spark, info, [t for t in all_terms if t in dfs], buckets=buckets,
-        base=reader.blocks_union(spark),
+        base=reader.blocks_union,
     )
     # per-query chunking: width = docID-space slice so expected postings per
     # task stay bounded. sum(df) over the query's terms is the upper bound of
@@ -921,7 +933,7 @@ def search(
                     null("binary").alias("dls"), "slice_id", "bm",
                 )
             )
-        shadow_df = reader.shadow_slices(spark)
+        shadow_df = reader.shadow_slices
         if shadow_df is not None:
             s_need = need.distinct()
             parts.append(
@@ -935,12 +947,9 @@ def search(
                     null("binary").alias("dls"), "slice_id", "bm",
                 )
             )
-        joined = parts[0]
-        for p in parts[1:]:
-            joined = joined.unionByName(p)
-        joined = joined.select(*unified_cols)
+        joined = _union_all(parts).select(*unified_cols)
 
-    # LSM shadowing bitmaps come precomputed from the cached reader
+    # LSM shadowing bitmaps come from the index snapshot
     shadows = reader.shadows
     b_meta = spark.sparkContext.broadcast(
         {"dfs": dfs, "q_terms": q_terms, "q_k": q_k, "N": N, "avgdl": avgdl,
@@ -1097,17 +1106,9 @@ def search(
         # newest-wins). top-k is tiny → broadcast it, stream docs past it.
         from pyspark.sql.window import Window
 
-        parts = []
-        for i, m in enumerate(info["segments"]):
-            p = os.path.join(index_dir, "segments", m["segment"], "docs")
-            parts.append(
-                spark.read.parquet(p).select("doc_id", "url").withColumn(
-                    "_rank", F.lit(i)
-                )
-            )
-        docs = parts[0]
-        for d in parts[1:]:
-            docs = docs.unionByName(d)
+        docs = reader.segment_union("docs", rank_col="_rank").select(
+            "doc_id", "url", "_rank"
+        )
         joined_docs = docs.join(F.broadcast(out), "doc_id")
         w = Window.partitionBy("query_id", "doc_id").orderBy(F.desc("_rank"))
         out = (
@@ -1115,9 +1116,6 @@ def search(
             .filter(F.col("_rn") == 1)
             .select("query_id", "rank", "doc_id", "score", "url")
         )
-    while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-        _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-    _PLAN_CACHE[plan_key] = out
     return out
 
 
@@ -1141,17 +1139,12 @@ def prefix_search(
     if reader.term_stats is not None:
         matches = [t for t in reader.term_stats if t.startswith(prefix)]
         matches.sort(key=lambda t: (-reader.term_stats[t][0], t))
-    else:  # big-vocab path: filter term_stats relationally
-        dfs = []
-        for seg in reader.info["segments"]:
-            p = os.path.join(index_dir, "segments", seg["segment"], "term_stats")
-            dfs.append(spark.read.parquet(p))
-        union = dfs[0]
-        for d in dfs[1:]:
-            union = union.unionByName(d)
+    else:  # big-vocab path: the same live dfs, summed relationally
         rows = (
-            union.filter(F.col("term").startswith(prefix))
+            _term_rows(spark, reader.info)
+            .filter(F.col("term").startswith(prefix))
             .groupBy("term").agg(F.sum("df").alias("df"))
+            .filter(F.col("df") > 0)
             .orderBy(F.desc("df"), "term").limit(max_expansion).collect()
         )
         matches = [r["term"] for r in rows]

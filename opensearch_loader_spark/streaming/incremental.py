@@ -48,6 +48,7 @@ def _extract_if_null(text: pd.Series, html: pd.Series) -> pd.Series:
 
 from opensearch_loader_spark import BLOCK_SIZE
 from opensearch_loader_spark.indexer import (
+    boundaries_from_sample,
     doc_lengths,
     pack_partial_runs,
     sampled_skew_plan,
@@ -55,7 +56,7 @@ from opensearch_loader_spark.indexer import (
     tokenize_postings,
     with_bucket,
 )
-from opensearch_loader_spark.query_engine import load_index_info
+from opensearch_loader_spark.query_engine import get_reader
 
 
 def build_delta_segment(
@@ -85,23 +86,17 @@ def build_delta_segment(
     import pandas as pd
     from pyspark.sql import types as T
 
-    info = load_index_info(index_dir)
-    if segment in [m["segment"] for m in info["segments"]]:
+    reader = get_reader(spark, index_dir)
+    if segment in reader.segments:
         raise ValueError(f"segment {segment!r} is live in {index_dir}")
-    n_buckets = info["n_buckets"]
-    newest = info["segments"][-1]["segment"]
+    n_buckets = reader.info["n_buckets"]
+    newest = reader.segments[-1]
     # url → docID map across all live segments (newest wins)
     from pyspark.sql.window import Window
 
-    doc_maps = []
-    for i, m in enumerate(info["segments"]):
-        p = os.path.join(index_dir, "segments", m["segment"], "docs")
-        doc_maps.append(
-            spark.read.parquet(p).select("url", "doc_id").withColumn("_r", F.lit(i))
-        )
-    existing = doc_maps[0]
-    for d in doc_maps[1:]:
-        existing = existing.unionByName(d)
+    existing = reader.segment_union("docs", rank_col="_r").select(
+        "url", "doc_id", "_r"
+    )
     # newest-wins per url via hash-agg max(struct) — docIDs are stable per
     # url across segments, so any row would do; max(_r) keeps it newest.
     # (A row_number window here sorts the whole docs-sized map — the same
@@ -160,12 +155,7 @@ def build_delta_segment(
             .filter(F.pmod(F.xxhash64("url"), F.lit(mod)) == 0)
             .collect()
         )
-        boundaries: list[str] = []
-        if sample and n_part > 1:
-            step = max(1, len(sample) // n_part)
-            boundaries = sorted(
-                {sample[i] for i in range(step, len(sample), step)}
-            )[: n_part - 1]
+        boundaries = boundaries_from_sample(sample, n_part)
         from opensearch_loader_spark.indexer import _pid_column
 
         pid_expr = _pid_column(boundaries)
@@ -268,17 +258,9 @@ def build_delta_segment(
     # postings scan.
     replaced_dl_sum = 0.0
     if updated_count:
-        old_parts = []
-        for i, m in enumerate(info["segments"]):
-            p = os.path.join(index_dir, "segments", m["segment"], "docs")
-            old_parts.append(
-                spark.read.parquet(p)
-                .select("doc_id", "doc_len", "text")
-                .withColumn("_r", F.lit(i))
-            )
-        old_all = old_parts[0]
-        for d in old_parts[1:]:
-            old_all = old_all.unionByName(d)
+        old_all = reader.segment_union("docs", rank_col="_r").select(
+            "doc_id", "doc_len", "text", "_r"
+        )
         wd = Window.partitionBy("doc_id").orderBy(F.desc("_r"))
         old_docs = (
             old_all.join(matched.select("doc_id").distinct(), "doc_id")
@@ -314,8 +296,8 @@ def build_delta_segment(
     # to the old salt_postings, so query-side union is unchanged.
     plan = sampled_skew_plan(delta_docs, n_delta, rows_per_run)
     partials = tokenize_partial_runs(delta_docs, plan)
-    # pack with the DELTA's avgdl for block-max bounds; the query engine
-    # rescales bounds by max(1, global_avgdl/seg_avgdl) for safety
+    # block-max bounds use the delta's own avgdl; the scorer decodes every
+    # block and reads no bound
     blocks = with_bucket(
         pack_partial_runs(partials, avgdl, block_size),
         n_buckets,

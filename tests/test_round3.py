@@ -297,16 +297,19 @@ def test_dedup_clusters_matches_bruteforce(spark):
 def test_doc_filter_bitmap_cached(spark, small_index):
     from opensearch_loader_spark import query_engine as qe
 
-    qe._ALLOWED_CACHE.clear()
+    qe.drop_reader()
     r1 = search(
         spark, small_index, [("q", "spark block", 10)], doc_filter="lang = 'en'"
     ).collect()
-    assert len(qe._ALLOWED_CACHE) == 1
-    cached = next(iter(qe._ALLOWED_CACHE.values()))
+    reader = qe.get_reader(spark, small_index)
+    assert list(reader._allowed) == ["lang = 'en'"]
+    cached = reader._allowed["lang = 'en'"]
     r2 = search(
         spark, small_index, [("q", "spark block", 10)], doc_filter="lang = 'en'"
     ).collect()
-    assert next(iter(qe._ALLOWED_CACHE.values())) is cached
+    assert qe.get_reader(spark, small_index) is reader
+    assert reader.allowed("lang = 'en'") is cached
+    assert list(reader._allowed) == ["lang = 'en'"]
     assert sorted((r["doc_id"], round(r["score"], 9)) for r in r1) == sorted(
         (r["doc_id"], round(r["score"], 9)) for r in r2
     )
@@ -321,9 +324,9 @@ def test_bitmap_slices_roundtrip_and_payload(spark):
     max_doc — 20 docs spread over a 10M-doc space is 2 slices, not 1.25 MB."""
     from opensearch_loader_spark.query_engine import (
         SLICE_DOCS,
-        assemble_slices,
         bitmap_contains,
         docid_bitmap_slices,
+        slice_map,
     )
 
     ids = list(range(100, 110)) + list(range(10_000_000, 10_000_010))
@@ -333,15 +336,13 @@ def test_bitmap_slices_roundtrip_and_payload(spark):
     assert {r["slice_id"] for r in rows} == occupied
     assert all(len(bytes(r["bm"])) == SLICE_DOCS // 8 for r in rows)
 
-    # membership: probe members and non-members via per-slice assembly
-    # (assembling only one slice keeps lo local, as a scoring task would)
-    by_slice = {r["slice_id"]: r["bm"] for r in rows}
-    for probe, want in [(100, True), (111, False), (10_000_009, True),
-                        (9_999_999, False)]:
-        sid = probe // SLICE_DOCS
-        bm = assemble_slices([(sid, by_slice[sid])]) if sid in by_slice else None
-        got = bool(bm and bitmap_contains(np.array([probe]), bm)[0])
-        assert got == want, probe
+    # membership: probe members and non-members through the slice map a
+    # scoring task builds from the slice rows it is shipped
+    bm = slice_map((r["slice_id"], r["bm"]) for r in rows)
+    probes = [(100, True), (111, False), (10_000_009, True), (9_999_999, False),
+              (5 * SLICE_DOCS, False)]
+    got = bitmap_contains(np.array([p for p, _ in probes]), bm)
+    assert got.tolist() == [w for _, w in probes]
 
 
 def test_sharded_search_rank_identical(spark, tmp_path, monkeypatch):
@@ -367,9 +368,7 @@ def test_sharded_search_rank_identical(spark, tmp_path, monkeypatch):
     base_c = search(spark, d, [("q", "spark block", 10)], conjunctive=True).collect()
 
     monkeypatch.setattr(qe, "BITMAP_BROADCAST_MAX_DOC", 16)
-    qe._READER_CACHE.clear()
-    qe._ALLOWED_SLICES_CACHE.clear()
-    qe._PLAN_CACHE.clear()  # the plans above were built for broadcast mode
+    qe.drop_reader()  # the snapshot above was built for broadcast mode
     reader = qe.get_reader(spark, d)
     assert reader.sharded
     # no O(max_doc) driver bitmaps in sharded mode
@@ -386,7 +385,7 @@ def test_sharded_search_rank_identical(spark, tmp_path, monkeypatch):
     # conjunctive path through sliced shadows too
     got_c = search(spark, d, [("q", "spark block", 10)], conjunctive=True).collect()
     assert norm(got_c) == norm(base_c)
-    qe._READER_CACHE.clear()
+    qe.drop_reader()
 
 
 # -------------------------------------------------------------- CLI round 3

@@ -50,7 +50,10 @@ class TestPidColumn:
     def test_docids_invariant_to_partition_count(self, spark, tiny_corpus):
         """docIDs are the global url rank — identical for ANY boundary set,
         including an n_part large enough to force the searchsorted path."""
-        from opensearch_loader_spark.indexer import prepare_docs
+        from opensearch_loader_spark.indexer import (
+            boundaries_from_sample,
+            prepare_docs,
+        )
 
         a = {
             r["url"]: r["doc_id"]
@@ -59,10 +62,14 @@ class TestPidColumn:
         }
         b = {
             r["url"]: r["doc_id"]
-            for r in prepare_docs(tiny_corpus, id_partitions=2048)
+            for r in prepare_docs(tiny_corpus, id_partitions=64)
             .select("url", "doc_id").collect()
         }
         assert a == b
+        # 64 partitions still pick more than 32 boundaries over the 200
+        # urls, so the searchsorted UDF path ran
+        urls = sorted(a)
+        assert len(boundaries_from_sample(urls, 64)) > 32
         # dense, url-ordered
         ordered = sorted(a)
         assert [a[u] for u in ordered] == list(range(len(ordered)))
@@ -164,13 +171,11 @@ class TestShardedCompaction:
 
         compact_segments(spark, a, "seg-merged", block_size=16, rows_per_run=50)
 
-        import opensearch_loader_spark.operators.merge as merge_mod
-
         monkeypatch.setattr(qe, "BITMAP_BROADCAST_MAX_DOC", 16)
         calls = []
-        orig = merge_mod.collect_docid_bitmap
+        orig = qe.collect_docid_bitmap
         monkeypatch.setattr(
-            merge_mod,
+            qe,
             "collect_docid_bitmap",
             lambda *a_, **k: calls.append(1) or orig(*a_, **k),
         )
@@ -191,7 +196,7 @@ class TestShardedCompaction:
             )
 
         assert snap(b) == snap(a)
-        qe._READER_CACHE.clear()
+        qe.drop_reader()
         ra = search(spark, a, [("q", "spark block", 10)]).collect()
         rb = search(spark, b, [("q", "spark block", 10)]).collect()
         key = lambda rows: [

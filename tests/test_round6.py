@@ -406,9 +406,9 @@ class TestSearchPlanReuse:
         d, _ = tiny_index
         r1 = search(spark, d, [("q", "the data", 5)]).collect()
         reader = get_reader(spark, d)
-        df_a = reader.blocks_union(spark)
+        df_a = reader.blocks_union
         r2 = search(spark, d, [("q", "the data", 5)]).collect()
-        df_b = get_reader(spark, d).blocks_union(spark)
+        df_b = get_reader(spark, d).blocks_union
         assert df_a is df_b  # plan object reused, no re-listing
         assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
 
@@ -419,7 +419,6 @@ class TestSearchPlanReuse:
         DataFrame object); any index MANIFEST change must invalidate it.
         Different queries/flags must never share a plan."""
         import os
-        import time
 
         from opensearch_loader_spark.query_engine import search
 
@@ -431,11 +430,13 @@ class TestSearchPlanReuse:
         assert c is not a
         e = search(spark, d, [("q", "the data", 5)], conjunctive=True)
         assert e is not a
-        # touch the MANIFEST (what every build/delta/compaction rewrite
-        # does) → fingerprint changes → fresh plan, same results
+        # rewrite the MANIFEST (what every build/delta/compaction does) →
+        # new snapshot → fresh plan, same results
         top = os.path.join(d, "MANIFEST.json")
-        now = time.time() + 2
-        os.utime(top, (now, now))
+        with open(top) as fh:
+            body = fh.read()
+        with open(top, "w") as fh:
+            fh.write(body + "\n")
         f = search(spark, d, [("q", "the data", 5)])
         assert f is not a
         assert sorted(map(tuple, f.collect())) == sorted(
@@ -468,7 +469,7 @@ class TestSearchPlanReuse:
         reader = get_reader(spark, d)
         slices = spark.range(3).persist()
         slices.count()
-        reader._shadow_slices_df = slices
+        reader.__dict__["shadow_slices"] = slices  # the cached_property slot
         assert get_reader(spark.newSession(), d) is not reader
         assert not slices.storageLevel.useMemory
         assert not slices.storageLevel.useDisk
