@@ -11,9 +11,11 @@ and the delegated search-side operators natively on Spark:
 - ``analysis``       tokenizer contract (shared by engine and oracle)
 - ``functions``      varbyte/delta-gap codecs, BM25 math, text feature fns
 - ``corpus``         deterministic synthetic Common-Crawl-style corpus
-- ``indexer``        postings build: tokenize → skew-salted shuffle →
+- ``indexer``        docs pipeline (text extraction, url dedup, docIDs,
+                     doc_len) shared by build and delta; postings build:
+                     map-side partial runs → (term, run) shuffle →
                      delta-gap+varbyte block packing with block-max metadata
-- ``query_engine``   BM25 top-k: naive DataFrame scorer + vectorized TAAT
+- ``query_engine``   BM25 top-k: one vectorized TAAT scorer
 - ``operators``      dedup / similarity / update-merge / multimodal plumbing
 - ``plans``          mapping parse + validation (reference loader.py:281-458)
 - ``oracle``         pure-Python golden BM25 scorer (stand-in for OpenSearch)

@@ -6,18 +6,19 @@ bulk_upsert; Lucene then builds the inverted index server-side).
 Stages (all DataFrame/Arrow; no per-row Python — driver input_hint):
 
  1. text extraction    html→text pandas UDF, byte-identical per url
-                       (text column authoritative when present)
+                       (text column authoritative when present); the one
+                       extractor, shared with delta segments (extract_text)
  2. url dedup          last-writer-wins by warc_ts (reference analogue:
                        upsert keyed on id_field, loader.py:610)
  3. docID assignment   scalable two-pass: deterministic url-range buckets
                        (hash-sampled boundaries), per-bucket counts →
-                       offsets (no global window, no corpus cache)
- 4. tokenize+tf        mapInPandas: per-doc Counter → (term, docID, tf, dl)
-                       rows — map-side tf combine, no (term,doc) shuffle
-                       (measured faster than explode+agg AND hof variants;
-                       see tokenize_postings docstring)
- 5. skew plan          df per term; head terms split into ceil(df/rows_per_run)
-                       salted runs (SURVEY.md §4.2.1)
+                       offsets (no global window, no corpus cache); bucket
+                       count sized from the input's row count
+ 4. tokenize+tf        mapInPandas: per-partition term interning → varbyte
+                       partial runs per (term, run) — map-side combine, no
+                       (term, doc) shuffle (tokenize_partial_runs)
+ 5. skew plan          sampled df per term; head terms split into
+                       ceil(df/rows_per_run) runs (SURVEY.md §4.2.1)
  6. pack               repartition(term, run) → mapInArrow, one vectorized pass
                        per partition over all (term, run) groups: sort by
                        docID, delta-gap + varbyte encode docIDs/tfs/doc_lens,
@@ -125,15 +126,62 @@ def _pid_column(boundaries: list[str]):
 
 def boundaries_from_sample(sample: list[str], n_part: int) -> list[str]:
     """Pick ≤ n_part-1 url-range boundaries from a sorted deterministic url
-    sample (every step-th element, deduped, capped). Shared by prepare_docs
-    and the delta path's fresh-docID assignment (VERDICT r4 item 6 — the
-    logic was duplicated)."""
+    sample (every step-th element, deduped, capped)."""
     if not sample or n_part <= 1:
         return []
     step = max(1, len(sample) // n_part)
     return sorted({sample[i] for i in range(step, len(sample), step)})[
         : n_part - 1
     ]
+
+
+# docs per docID-assignment partition (see prepare_docs)
+DOCS_PER_ID_PARTITION = 1024
+
+
+def extract_text(corpus: DataFrame) -> DataFrame:
+    """The one text extractor: corpus rows (url, warc_ts, html, text, lang,
+    and any other column) → the same rows without html, with ``text`` taken
+    from the text column when present, else extracted from html, plus its
+    ``text_sha256``. ``warc_ts`` travels as epoch micros ``warc_ts_us``.
+
+    Timestamps are shipped through the Arrow/pandas boundary as int64:
+    Spark's session-timezone localization of TimestampType in Python workers
+    has a large per-task cost that anti-scales with thread count (measured
+    3.2s@8 → 22.1s@32 threads for a passthrough of 1M rows); int64 moves at
+    full Arrow speed. Callers restore TimestampType after their last Python
+    stage.
+
+    Byte-identity per url holds because extract_text_from_html is a pure
+    function (north rule); sha256 is JVM ``sha2`` (bit-identical to
+    hashlib's hexdigest). Rows that already carry text never touch Python:
+    the html branch is filtered out (text IS NULL pushed to the scan, html
+    pruned from the text branch) and only it pays the Arrow round trip and
+    the Python parse. A row with NEITHER text nor html fails fast —
+    silently indexing empty text would turn bad input rows into invisible
+    empty docs (ADVICE r2)."""
+    corpus_us = corpus.withColumn(
+        "warc_ts_us", F.unix_micros(F.col("warc_ts"))
+    ).drop("warc_ts")
+    if "html" not in corpus_us.columns:
+        corpus_us = corpus_us.withColumn("html", F.lit(None).cast("binary"))
+    cols = [c for c in corpus_us.columns if c != "html"]
+    with_text = corpus_us.filter(F.col("text").isNotNull()).select(*cols)
+    no_text = corpus_us.filter(F.col("text").isNull())
+
+    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def _one(h):
+            if h is None:
+                raise ValueError("corpus row has neither text nor html")
+            return extract_text_from_html(bytes(h))
+
+        for pdf in batches:
+            pdf["text"] = pdf["html"].map(_one)
+            yield pdf[cols]
+
+    return with_text.unionByName(
+        no_text.mapInPandas(_extract, schema=with_text.schema)
+    ).withColumn("text_sha256", F.sha2(F.encode(F.col("text"), "utf-8"), 256))
 
 
 def prepare_docs(
@@ -143,82 +191,27 @@ def prepare_docs(
     analyzer=None,
 ) -> DataFrame:
     """corpus(url, warc_ts, html, text, lang) → docs(doc_id, url, warc_ts,
-    lang, text, text_sha256). Dense deterministic docIDs ordered by url.
+    lang, text, text_sha256, doc_len). Dense deterministic docIDs from 0,
+    ordered by url. The build numbers its whole corpus here; a delta numbers
+    its new urls here and shifts the ids above the index's max docID.
 
     Scale notes: docID assignment avoids a global single-partition window by
     EXPLICIT url-range bucketing (deterministic hash-sampled boundaries →
     pid) plus per-bucket offsets from a url-pruned count — no sampling-
     dependent repartitionByRange, therefore no full-corpus persist to pin
-    its boundaries. Dedup is a hash-agg max(struct) keyed on url.
+    its boundaries. Dedup is folded into the same partition sort.
 
     ``_aux`` (internal): receives side-channel stats from the url-pruned
     sizing passes so build_index derives its snapshot fingerprint, N and max
     docID without touching the extraction path — keys: n_docs, url_hash
     (decimal-sum of per-url xxhash64), max_doc_id.
     """
-    from pyspark.sql.window import Window
-
     spark = corpus.sparkSession
-    # partition count sized by DATA, not core count (floor 32 — same
-    # rationale as pack_blocks): a 2-core run with 2 url-range buckets makes
-    # the docs write a pair of multi-million-doc straggler tasks (observed:
-    # one task grinding the JVM doc_len tokenizer over 3M docs for 9+ min in
-    # a 6M-doc 2-core scaling leg) AND leaves the written docs parquet in 2
-    # fat files that starve the postings stage's read parallelism. Excess
-    # partitions just queue on a small pool, exactly as on a real cluster;
-    # docIDs are invariant to the bucket count (tested).
-    n_part = id_partitions or max(
-        32, corpus.sparkSession.sparkContext.defaultParallelism
+
+    # 1. authoritative text: `text` column, else extracted from html
+    extracted = extract_text(corpus).select(
+        "url", "warc_ts_us", "lang", "text", "text_sha256"
     )
-
-    # Timestamps are shipped through the Arrow/pandas boundary as epoch
-    # micros (int64): Spark's session-timezone localization of TimestampType
-    # in Python workers has a large per-task cost that anti-scales with
-    # thread count (measured 3.2s@8 → 22.1s@32 threads for a passthrough of
-    # 1M rows); int64 moves at full Arrow speed. Restored to TimestampType
-    # after the last Python stage.
-    corpus_us = corpus.withColumn(
-        "warc_ts_us", F.unix_micros(F.col("warc_ts"))
-    ).drop("warc_ts")
-
-    # 1. authoritative text: `text` column, else extracted from html.
-    #    Byte-identity per url is guaranteed because extract_text_from_html
-    #    is a pure function (north rule); we record sha256 for the check.
-    #
-    #    Round-2 plan shape: rows that already carry text never touch Python
-    #    — the html branch is filtered out (text IS NULL pushed to the scan,
-    #    html column pruned from the text branch) and only IT pays the Arrow
-    #    round-trip + Python parse. sha256 is JVM `sha2` (bit-identical to
-    #    hashlib's hexdigest). The round-1 all-rows mapInPandas made the docs
-    #    stage scale at 1.67× from 2→8 cores; this leaves it shuffle-bound.
-    text_cols = ["url", "warc_ts_us", "lang", "text"]
-    with_text = corpus_us.filter(F.col("text").isNotNull()).select(*text_cols)
-    no_text = corpus_us.filter(F.col("text").isNull())
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # a row with NEITHER text nor html fails fast (matching the delta
-        # path's _extract_if_null) — silently indexing empty text would turn
-        # bad input rows into invisible empty docs (ADVICE r2)
-        def _one(h):
-            if h is None:
-                raise ValueError("corpus row has neither text nor html")
-            return extract_text_from_html(bytes(h))
-
-        for pdf in batches:
-            pdf["text"] = pdf["html"].map(_one)
-            yield pdf[text_cols]
-
-    extracted_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts_us", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    extracted = with_text.unionByName(
-        no_text.mapInPandas(_extract, schema=extracted_schema)
-    ).withColumn("text_sha256", F.sha2(F.encode(F.col("text"), "utf-8"), 256))
 
     # 2. last-writer-wins dedup on url (upsert semantics of the reference's
     #    bulk_upsert keyed on id_field, opensearch_client.py:199-213).
@@ -262,17 +255,29 @@ def prepare_docs(
     #    sample defines — inherently a second pass). docIDs are invariant to
     #    the sample rate: pid is monotone in url and offsets are exact, so
     #    the global url-ordered numbering is the same for ANY boundary set.
+    #
+    #    Bucket count, from the raw row count: one bucket per
+    #    DOCS_PER_ID_PARTITION docs, at most max(32, cores). Each bucket is a
+    #    Python task and a docs file, so a small input (a delta's new urls, a
+    #    test corpus) does not pay 32 near-empty worker round trips
+    #    (measured on 4 cores: writing 300 docs took 3.8 s at 32 buckets,
+    #    1.0 s at 1). A large build keeps the floor of 32 however few the
+    #    cores: a 6M-doc 2-core run with 2 buckets made two multi-million-doc
+    #    straggler tasks and left the docs table in 2 fat files that starved
+    #    the postings stage's read parallelism. The sample still aims at 256
+    #    urls per bucket of the full width, so inputs up to 256 × max(32,
+    #    cores) urls keep the exact-count shortcut below.
     raw_n = corpus.count()
-    mod = max(1, raw_n // (256 * n_part))
-    urls = corpus_us.select("url").distinct()
+    width = max(32, spark.sparkContext.defaultParallelism)
+    n_part = id_partitions or max(1, min(width, -(-raw_n // DOCS_PER_ID_PARTITION)))
+    mod = max(1, raw_n // (256 * max(n_part, width)))
+    urls = corpus.select("url").distinct()
     tot = urls.agg(
-        F.count("*").alias("n"),
         F.sum(F.xxhash64("url").cast("decimal(38,0)")).alias("h"),
         F.collect_list(
             F.when(F.pmod(F.xxhash64("url"), F.lit(mod)) == 0, F.col("url"))
         ).alias("sample"),
     ).collect()[0]
-    n_docs = int(tot["n"])
     url_hash = str(int(tot["h"])) if tot["h"] is not None else "0"
     sample = sorted(tot["sample"])
     boundaries = boundaries_from_sample(sample, n_part)
@@ -320,7 +325,7 @@ def prepare_docs(
     # note above).
     parted = (
         deduped.withColumn("_pid", pid_expr)
-        .repartition(max(n_part, 1), "_pid")
+        .repartition(n_part, "_pid")
         .sortWithinPartitions(
             "_pid",
             "url",
@@ -331,9 +336,8 @@ def prepare_docs(
         )
     )
 
-    out_fields = list(extracted_schema.fields) + [
-        T.StructField("text_sha256", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
+    out_fields = list(deduped.schema.fields) + [
+        T.StructField("doc_id", T.LongType())
     ]
     if analyzer is not None:
         out_fields.append(T.StructField("doc_len", T.IntegerType()))
@@ -488,28 +492,17 @@ def tokenize_postings(docs: DataFrame, analyzer=None) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(_tok, schema=POSTING_SCHEMA)
 
 
-def doc_lengths(docs_with_text: DataFrame, analyzer=None) -> DataFrame:
-    """(doc_id, doc_len) via the same tokenizer (dl = analyzed token count).
-    Default tokenizer runs JVM-side (codegen); custom analyzers use Arrow."""
+def doc_freqs(docs: DataFrame, analyzer=None) -> DataFrame:
+    """(term, df) over docs(doc_id, text): one row per distinct term of a
+    doc, counted per term. The default tokenizer runs JVM-side (codegen, no
+    Python worker); a custom analyzer goes through tokenize_postings."""
     if analyzer is None:
-        return docs_with_text.select(
-            "doc_id", _jvm_token_count_col().cast("int").alias("doc_len")
+        terms = docs.select(
+            F.explode(F.array_distinct(_jvm_tokens_col())).alias("term")
         )
-
-    def _dl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf["doc_len"] = [len(analyzer(t)) for t in pdf["text"].values]
-            yield pdf[["doc_id", "doc_len"]]
-
-    return docs_with_text.select("doc_id", "text").mapInPandas(
-        _dl,
-        schema=T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("doc_len", T.IntegerType()),
-            ]
-        ),
-    )
+    else:
+        terms = tokenize_postings(docs, analyzer=analyzer).select("term")
+    return terms.groupBy("term").agg(F.count("*").alias("df"))
 
 
 # ----------------------------------------------- stage 4+5+6 single-pass path
@@ -529,7 +522,7 @@ def doc_lengths(docs_with_text: DataFrame, analyzer=None) -> DataFrame:
 #     flushes them as delta-gap+varbyte PARTIAL RUNS — the shuffle then moves
 #     a few thousand fat compressed rows per partition instead of hundreds of
 #     millions of 20-byte rows, and the (term, run) reducer merges sorted
-#     partials and re-emits final blocks via the shared emit_blocks. Shuffle
+#     partials and re-emits final blocks via the shared emit_segments. Shuffle
 #     bytes drop ~10× (varbyte ~2-4 B/posting vs ~20 B/row + per-row shuffle
 #     overhead), and the Arrow boundary crosses once per partial instead of
 #     once per posting — the DRAM-bandwidth suspect behind the 0.49 scaling.
@@ -574,21 +567,9 @@ def sampled_skew_plan(
     if n_docs * margin <= rows_per_run:
         return {}
     mod = max(1, min(rows_per_run // 100, n_docs // 200_000))
-    sample = docs.filter(F.pmod(F.col("doc_id"), F.lit(mod)) == 0)
-    if analyzer is None:
-        counts = (
-            sample.select(
-                F.explode(F.array_distinct(_jvm_tokens_col())).alias("term")
-            )
-            .groupBy("term")
-            .agg(F.count("*").alias("df"))
-        )
-    else:
-        counts = (
-            tokenize_postings(sample, analyzer=analyzer)
-            .groupBy("term")
-            .agg(F.count("*").alias("df"))
-        )
+    counts = doc_freqs(
+        docs.filter(F.pmod(F.col("doc_id"), F.lit(mod)) == 0), analyzer
+    )
     thresh = rows_per_run / (mod * margin)
     plan: dict[str, int] = {}
     for r in counts.filter(F.col("df") >= F.lit(float(thresh))).collect():
@@ -616,8 +597,8 @@ def tokenize_partial_runs(
     segmented delta+varbyte pass per stream — per-term Python work is a
     list-index plus three blob slices, so the flush stays cheap at web
     vocabularies (millions of distinct terms). Head terms split into
-    ``doc_id % n_splits`` runs from the sampled plan — identical run
-    semantics to salt_postings."""
+    ``doc_id % n_splits`` runs from the sampled plan, so every (term, doc)
+    lands in exactly one run."""
     from opensearch_loader_spark.analysis import tokenize
     from opensearch_loader_spark.functions.varbyte import (
         delta_encode_segments,
@@ -929,10 +910,9 @@ def pack_partial_runs(
 ) -> DataFrame:
     """Merge map-side partial runs into final blocks, one vectorized pass
     per partition. The (term, run) repartition IS the salted repartition-
-    by-term (same contract as pack_blocks); its partition count is left to
-    spark.sql.shuffle.partitions and AQE coalescing, because a task's memory
-    is one Arrow batch plus its largest (term, run) group however many
-    groups it holds. Within a partition, rows sorted by (term, run) arrive
+    by-term; its partition count is left to spark.sql.shuffle.partitions
+    and AQE coalescing, because a task's memory is one Arrow batch plus its
+    largest (term, run) group however many groups it holds. Within a partition, rows sorted by (term, run) arrive
     as whole groups (whole_groups), and each chunk is decoded, sorted and
     re-encoded with one segmented pass per stream — no Python call per
     group."""
@@ -948,36 +928,6 @@ def pack_partial_runs(
     )
 
 
-# ------------------------------------------------------------------- stage 5
-
-def skew_plan(postings: DataFrame, rows_per_run: int) -> DataFrame:
-    """term → n_splits for head terms (Zipf skew). df computed with map-side
-    partial aggregation; only terms needing >1 run survive the filter, so the
-    plan table is tiny and broadcastable."""
-    return (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "n_splits", F.ceil(F.col("df") / F.lit(rows_per_run)).cast("int")
-        )
-        .filter(F.col("n_splits") > 1)
-        .select("term", "n_splits")
-    )
-
-
-def salt_postings(postings: DataFrame, plan: DataFrame) -> DataFrame:
-    """Add `run` (salt) column: 0 for tail terms; doc_id % n_splits for head
-    terms. Broadcast join — the plan has only head terms."""
-    salted = postings.join(F.broadcast(plan), "term", "left").withColumn(
-        "run",
-        F.when(
-            F.col("n_splits").isNotNull(),
-            F.pmod(F.col("doc_id"), F.col("n_splits")).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    return salted.drop("n_splits")
-
-
 # ------------------------------------------------------------------- stage 6
 
 def emit_blocks(
@@ -990,55 +940,10 @@ def emit_blocks(
     block_size: int = BLOCK_SIZE,
 ) -> list[tuple]:
     """Encode one docID-sorted posting run into BLOCK_SCHEMA rows — the
-    one-run case of emit_segments, used by the row-shuffle reference
-    packer."""
+    one-run case of emit_segments, for building scorer inputs directly."""
     cols = emit_segments(np.zeros(1, np.int64), doc_ids, tfs, dls, avgdl, block_size)
     rb = blocks_batch(pa.array([term], pa.string()), [run], cols)
     return [tuple(r.values()) for r in rb.to_pylist()]
-
-
-def _make_packer(avgdl: float, block_size: int = BLOCK_SIZE):
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        rows = emit_blocks(
-            pdf["term"].iloc[0],
-            int(pdf["run"].iloc[0]),
-            pdf["doc_id"].values,
-            pdf["tf"].values,
-            pdf["dl"].values,
-            avgdl,
-            block_size,
-        )
-        return pd.DataFrame(
-            rows,
-            columns=[f.name for f in BLOCK_SCHEMA.fields],
-        )
-
-    return pack
-
-
-def pack_blocks(
-    salted: DataFrame,
-    avgdl: float,
-    block_size: int = BLOCK_SIZE,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """(term, run)-grouped block packing. The groupBy's shuffle IS the
-    salted repartition-by-term: Spark hash-partitions on (term, run), so a
-    head term's runs land on different tasks (explicit skew splitting).
-
-    Partition count is sized by DATA, not by core count (floor of 32):
-    fewer-but-fatter partitions on a small executor pool would spill and
-    skew the low-parallelism leg of scaling runs; excess partitions just
-    queue, exactly as on a real cluster."""
-    n = shuffle_partitions or max(
-        32, salted.sparkSession.sparkContext.defaultParallelism
-    )
-    return (
-        salted.repartition(n, "term", "run")
-        .groupBy("term", "run")
-        .applyInPandas(_make_packer(avgdl, block_size), schema=BLOCK_SCHEMA)
-    )
 
 
 # ------------------------------------------------------------------- stage 7

@@ -30,7 +30,9 @@ and the segment unions, come from the index snapshot the query path reads
 
 The merged segment is written under a name MANIFEST does not list, and
 becomes visible by one atomic MANIFEST rewrite, so no step before that flip
-touches a live segment. The engine assumes one writer per index.
+touches a live segment. After the flip, every segment directory the new
+MANIFEST does not list is deleted. The engine assumes one writer per index:
+a segment another writer is still writing would be deleted too.
 """
 
 from __future__ import annotations
@@ -189,7 +191,8 @@ def compact_segments(
     The merge is written to ``out_segment``, or, when MANIFEST lists that
     name, to the first ``out_segment-NNNNNN`` it does not list; the returned
     manifest names the segment written. Only a leftover directory of that
-    unlisted name is removed before the write.
+    unlisted name is removed before the write; every other unlisted segment
+    directory is removed after the MANIFEST flip.
     """
     reader = get_reader(spark, index_dir)
     info, segs = reader.info, reader.segments
@@ -385,4 +388,11 @@ def compact_segments(
         os.path.join(index_dir, "MANIFEST.json"),
         {"segments": [out_segment], "n_buckets": info["n_buckets"]},
     )
+    # after the flip every other segment directory is garbage: the merged-
+    # from segments, and anything an earlier crash left unlisted. A crash
+    # here leaves a readable index, and the next compaction sweeps again.
+    seg_root = os.path.join(index_dir, "segments")
+    for name in sorted(os.listdir(seg_root)):
+        if name != out_segment:
+            shutil.rmtree(os.path.join(seg_root, name))
     return manifest

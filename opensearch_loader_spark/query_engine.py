@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from opensearch_loader_spark import BM25_B, BM25_K1
 from opensearch_loader_spark.analysis import query_terms
 from opensearch_loader_spark.functions.bm25 import bm25_idf, bm25_term_score
 from opensearch_loader_spark.functions.varbyte import delta_decode, varbyte_decode
@@ -1186,47 +1185,4 @@ def sayt_search(
     return search(
         spark, index_dir, [(f"sayt:{query}", terms, k)],
         conjunctive=(operator == "and"),
-    )
-
-
-# ----------------------------------------------- naive Catalyst-path scorer
-
-def naive_topk_df(
-    docs_with_text: DataFrame, query: str, k: int = 10, conjunctive: bool = False
-) -> DataFrame:
-    """Pure-DataFrame BM25 scorer (joins + window) — the cross-check path and
-    the SQL-expressible variant used by the driver oracle. Re-derives
-    postings from text with the shared tokenizer."""
-    from pyspark.sql.window import Window
-
-    from opensearch_loader_spark.indexer import doc_lengths, tokenize_postings
-
-    terms = sorted(query_terms(query))
-    spark = docs_with_text.sparkSession
-    postings = tokenize_postings(docs_with_text)
-    stats = doc_lengths(docs_with_text).agg(
-        F.count("*").alias("N"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    N, avgdl = int(stats["N"]), float(stats["avgdl"])
-
-    tdf = postings.groupBy("term").agg(F.count("*").alias("df"))
-    qp = postings.filter(F.col("term").isin(terms)).join(
-        F.broadcast(tdf.filter(F.col("term").isin(terms))), "term"
-    )
-    score = (
-        F.log(1.0 + (F.lit(N) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * (BM25_K1 + 1.0))
-        / (F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl)))
-    )
-    scored = qp.withColumn("tscore", score.cast("double"))
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("tscore").alias("score"), F.count("*").alias("n_terms")
-    )
-    if conjunctive:
-        agg = agg.filter(F.col("n_terms") == len(terms))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("rank", "doc_id", "score")
     )

@@ -22,38 +22,18 @@ import json
 import os
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _extract_if_null(text: pd.Series, html: pd.Series) -> pd.Series:
-    """html→text extraction for rows whose text is NULL — same stage as
-    prepare_docs at initial build (byte-identical per url). A row with
-    NEITHER text nor html fails fast rather than silently indexing empty.
-    Wrapped in F.pandas_udf lazily (needs an active session)."""
-    from opensearch_loader_spark.corpus import extract_text_from_html
-
-    need = text.isna()
-    if need.any():
-        text = text.copy()
-
-        def _one(h):
-            if h is None:
-                raise ValueError("update row has neither text nor html")
-            return extract_text_from_html(bytes(h))
-
-        text.loc[need] = html.loc[need].map(_one)
-    return text
-
 from opensearch_loader_spark import BLOCK_SIZE
 from opensearch_loader_spark.indexer import (
-    boundaries_from_sample,
-    doc_lengths,
+    _jvm_token_count_col,
+    doc_freqs,
+    extract_text,
     pack_partial_runs,
+    prepare_docs,
     sampled_skew_plan,
     tokenize_partial_runs,
-    tokenize_postings,
     with_bucket,
 )
 from opensearch_loader_spark.query_engine import get_reader
@@ -79,157 +59,75 @@ def build_delta_segment(
     ``segment`` must be a name MANIFEST does not list: a live segment's
     name raises ValueError before anything is written.
     """
-    import hashlib
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    from pyspark.sql.window import Window
 
     reader = get_reader(spark, index_dir)
     if segment in reader.segments:
         raise ValueError(f"segment {segment!r} is live in {index_dir}")
     n_buckets = reader.info["n_buckets"]
     newest = reader.segments[-1]
-    # url → docID map across all live segments (newest wins)
-    from pyspark.sql.window import Window
-
-    existing = reader.segment_union("docs", rank_col="_r").select(
-        "url", "doc_id", "_r"
-    )
-    # newest-wins per url via hash-agg max(struct) — docIDs are stable per
-    # url across segments, so any row would do; max(_r) keeps it newest.
-    # (A row_number window here sorts the whole docs-sized map — the same
-    # per-group-buffer plan the build dedup measured falling over at 6M+.)
+    # url → docID map across all live segments (newest wins) via hash-agg
+    # max(struct) — docIDs are stable per url across segments, so any row
+    # would do; max(_r) keeps it newest. (A row_number window here sorts the
+    # whole docs-sized map — the same per-group-buffer plan the build dedup
+    # measured falling over at 6M+.)
     existing = (
-        existing.groupBy("url")
+        reader.segment_union("docs", rank_col="_r")
+        .groupBy("url")
         .agg(F.max(F.struct("_r", "doc_id")).alias("_p"))
         .select("url", F.col("_p.doc_id").alias("doc_id"))
     )
-    max_id = existing.agg(F.max("doc_id")).collect()[0][0] or -1
+    # docIDs are never reused: every manifest records the largest it holds
+    max_id = reader.max_doc
 
-    # dedup within the batch (last writer by warc_ts), same as build —
-    # hash-agg, deterministic ties (lexicographic struct ordering)
-    b_cols = [c for c in updates.columns if c != "url"]
-    batch = (
-        updates.groupBy("url")
-        .agg(F.max(F.struct("warc_ts", *[c for c in b_cols if c != "warc_ts"])).alias("_p"))
-        .select("url", *[F.col(f"_p.{c}").alias(c) for c in b_cols])
-    )
-
-    # html→text extraction for rows whose text is NULL (ADVICE round-1: an
-    # html-only update must index its extracted text, not NULL)
-    if "html" in batch.columns:
-        extract_udf = F.pandas_udf(_extract_if_null, "string")
-        batch = batch.withColumn(
-            "text", extract_udf(F.col("text"), F.col("html"))
-        )
-    joined = batch.join(existing, "url", "left")
-    matched = joined.filter(F.col("doc_id").isNotNull())
-    unmatched = joined.filter(F.col("doc_id").isNull()).drop("doc_id")
-    # one pass for both counts (round 6): two separate .count() actions ran
-    # the batch join twice just to split one number
-    cnt_row = joined.agg(
-        F.count(F.when(F.col("doc_id").isNotNull(), 1)).alias("u"),
-        F.count(F.when(F.col("doc_id").isNull(), 1)).alias("n"),
+    # the batch's rows, each tagged with its url's docID (null: a new url);
+    # persisted, so the docs map is joined once for the counts and both
+    # halves of the batch
+    tagged = updates.join(existing, "url", "left").persist()
+    cnt_row = tagged.agg(
+        F.count_distinct(F.when(F.col("doc_id").isNotNull(), F.col("url"))).alias("u"),
+        F.count_distinct(F.when(F.col("doc_id").isNull(), F.col("url"))).alias("n"),
     ).collect()[0]
     updated_count = int(cnt_row["u"])
     new_count = int(cnt_row["n"])
     skipped_count = 0 if upsert else new_count
 
+    # re-indexed urls keep their docID: the build's extractor, its
+    # last-writer-wins rule (max of warc_ts, text, lang, text_sha256 — the
+    # row prepare_docs's partition sort keeps) and its doc_len expression
+    matched = (
+        extract_text(tagged.filter(F.col("doc_id").isNotNull()))
+        .groupBy("doc_id", "url")
+        .agg(F.max(F.struct("warc_ts_us", "text", "lang", "text_sha256")).alias("_p"))
+        .select("doc_id", "url", "_p.*")
+        .withColumn("doc_len", _jvm_token_count_col().cast("int"))
+        .withColumn("warc_ts", F.timestamp_micros(F.col("warc_ts_us")))
+        .drop("warc_ts_us")
+    )
+    delta_docs = matched
     if upsert and new_count:
-        # assign fresh docIDs above max — same deterministic explicit
-        # url-range bucketing as prepare_docs (round 3): pid is a pure
-        # function of url (hash-sampled boundaries), so the counts job and
-        # the assign pass agree without persisting the batch; timestamps
-        # cross the Arrow boundary as epoch micros (see indexer.prepare_docs
-        # for the anti-scaling rationale)
-        unmatched_us = unmatched.withColumn(
-            "warc_ts_us", F.unix_micros(F.col("warc_ts"))
-        ).drop("warc_ts")
-        n_part = max(1, spark.sparkContext.defaultParallelism // 2)
-        mod = max(1, new_count // (256 * n_part))
-        sample = sorted(
-            r["url"]
-            for r in unmatched_us.select("url")
-            .filter(F.pmod(F.xxhash64("url"), F.lit(mod)) == 0)
-            .collect()
-        )
-        boundaries = boundaries_from_sample(sample, n_part)
-        from opensearch_loader_spark.indexer import _pid_column
-
-        pid_expr = _pid_column(boundaries)
-        counts = {
-            r["_pid"]: r["cnt"]
-            for r in unmatched_us.select("url")
-            .withColumn("_pid", pid_expr)
-            .groupBy("_pid")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        offsets, acc = {}, max_id + 1
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        b_off = spark.sparkContext.broadcast(offsets)
-        parted = (
-            unmatched_us.withColumn("_pid", pid_expr)
-            .repartition(n_part, "_pid")
-            .sortWithinPartitions("_pid", "url")
-        )
-        schema = T.StructType(
-            [f for f in parted.schema.fields if f.name != "_pid"]
-            + [T.StructField("doc_id", T.LongType())]
-        )
-
-        def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            counters: dict[int, int] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pids = pdf["_pid"].values
-                ids = np.empty(len(pdf), dtype=np.int64)
-                for p in np.unique(pids):
-                    m = pids == p
-                    start = counters.get(int(p), b_off.value[int(p)])
-                    n = int(m.sum())
-                    ids[m] = np.arange(start, start + n, dtype=np.int64)
-                    counters[int(p)] = start + n
-                pdf = pdf.drop(columns=["_pid"])
-                pdf["doc_id"] = ids
-                yield pdf
-
-        fresh = (
-            parted.mapInPandas(_assign, schema)
-            .withColumn("warc_ts", F.timestamp_micros(F.col("warc_ts_us")))
-            .drop("warc_ts_us")
-        )
+        # new urls are numbered by the build's own pipeline, dense from 0 in
+        # url order, then shifted above the index's largest docID
+        fresh = prepare_docs(
+            tagged.filter(F.col("doc_id").isNull()).drop("doc_id")
+        ).withColumn("doc_id", F.col("doc_id") + F.lit(max_id + 1))
         delta_docs = matched.unionByName(fresh)
-    else:
-        delta_docs = matched
-
-    def _sha(col):
-        return F.sha2(F.encode(col, "utf-8"), 256)
-
-    delta_docs = delta_docs.withColumn("text_sha256", _sha(F.col("text"))).persist()
+    delta_docs = delta_docs.select(
+        "doc_id", "url", "warc_ts", "lang", "doc_len", "text_sha256", "text"
+    ).persist()
     n_delta = delta_docs.count()
     if n_delta == 0:
         delta_docs.unpersist()
+        tagged.unpersist()
         return {"segment": segment, "N": 0, "skipped": skipped_count, "empty": True}
 
-    # stats must stay GLOBAL (whole index), not per-delta: avgdl/N from all
-    # segments incl. this delta (approximation: recompute over union of docs)
-    dl = doc_lengths(delta_docs)
-    docs_out = delta_docs.join(dl, "doc_id").select(
-        "doc_id", "url", "warc_ts", "lang", "doc_len", "text_sha256", "text"
-    )
     seg_dir = os.path.join(index_dir, "segments", segment)
     # N, avgdl and max_doc_id fold into the docs write (as in the build) —
     # no read-back job
     from pyspark.sql import Observation
 
     obs = Observation(f"delta-stats-{uuid.uuid4().hex[:8]}")
-    docs_out.observe(
+    delta_docs.observe(
         obs,
         F.count(F.lit(1)).alias("N"),
         F.sum("doc_len").alias("dl_sum"),
@@ -242,8 +140,10 @@ def build_delta_segment(
     # record re-indexed (pre-existing) doc_ids: older segments' postings for
     # these docs are stale and must be shadowed at query time until
     # compaction rewrites them (LSM tombstone analogue). At real scale this
-    # would be a bloom filter per segment; here it's a tiny parquet.
-    matched.select("doc_id").distinct().write.mode("overwrite").parquet(
+    # would be a bloom filter per segment; here it's a tiny parquet. They
+    # are the delta's ids up to max_id: new urls are numbered above it.
+    reindexed = delta_docs.filter(F.col("doc_id") <= max_id).select("doc_id")
+    reindexed.write.mode("overwrite").parquet(
         os.path.join(seg_dir, "updated_ids")
     )
 
@@ -253,9 +153,9 @@ def build_delta_segment(
     # time — per-term df of the shadowed docs' old postings (df_neg) and the
     # sum of their old doc_lens (replaced_dl_sum) — so term_dfs/
     # load_index_info can subtract and idf/avgdl stay oracle-exact BETWEEN
-    # updates and compaction, not just after. Cost: one tokenize pass over
-    # just the re-indexed docs' old text (semi-join on doc_id), not a full
-    # postings scan.
+    # updates and compaction, not just after. Cost: one JVM tokenize pass
+    # over just the re-indexed docs' old text (semi-join on doc_id), not a
+    # full postings scan.
     replaced_dl_sum = 0.0
     if updated_count:
         old_all = reader.segment_union("docs", rank_col="_r").select(
@@ -263,7 +163,7 @@ def build_delta_segment(
         )
         wd = Window.partitionBy("doc_id").orderBy(F.desc("_r"))
         old_docs = (
-            old_all.join(matched.select("doc_id").distinct(), "doc_id")
+            old_all.join(reindexed, "doc_id")
             .withColumn("_rn", F.row_number().over(wd))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_r")
@@ -272,28 +172,21 @@ def build_delta_segment(
         replaced_dl_sum = float(
             old_docs.agg(F.sum("doc_len")).collect()[0][0] or 0.0
         )
-        df_neg = (
-            tokenize_postings(old_docs)
-            .groupBy("term")
-            .agg(F.count("*").cast("long").alias("df_neg"))
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-            )
+        df_neg = doc_freqs(old_docs).select(
+            "term",
+            F.col("df").alias("df_neg"),
+            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket"),
         )
         df_neg.write.mode("overwrite").parquet(os.path.join(seg_dir, "df_neg"))
         old_docs.unpersist()
 
     # SAME single-pass postings path as the initial build (VERDICT r4 item
-    # 3 — the delta previously kept the round-3 row-shuffle packer, so a
-    # large backfill through stream_corpus_to_segments re-inherited the
-    # ~20-byte-per-posting shuffle the build had eliminated): sampled skew
-    # plan over the delta (docIDs here are non-dense — matched docs keep
-    # old ids — so doc_id % mod is only approximately uniform, fine for a
-    # soft sizing bound; small deltas get mod=1, i.e. an exact plan),
-    # map-side partial packing, one (term, run) shuffle of varbyte
-    # partials. Run assignment (doc_id % n_splits) is identical semantics
-    # to the old salt_postings, so query-side union is unchanged.
+    # 3): sampled skew plan over the delta (docIDs here are non-dense —
+    # matched docs keep old ids — so doc_id % mod is only approximately
+    # uniform, fine for a soft sizing bound; small deltas get mod=1, i.e.
+    # an exact plan), map-side partial packing, one (term, run) shuffle of
+    # varbyte partials. Runs are doc_id % n_splits as in the build, so the
+    # query-side union is unchanged.
     plan = sampled_skew_plan(delta_docs, n_delta, rows_per_run)
     partials = tokenize_partial_runs(delta_docs, plan)
     # block-max bounds use the delta's own avgdl; the scorer decodes every
@@ -342,6 +235,7 @@ def build_delta_segment(
     top["segments"].append(segment)
     atomic_write_json(top_path, top)
     delta_docs.unpersist()
+    tagged.unpersist()
     return manifest
 
 
@@ -356,8 +250,6 @@ def stream_corpus_to_segments(
     files; each micro-batch becomes one ordered delta segment (foreachBatch +
     merge idiom — SURVEY.md §2.8). Late/duplicate urls are handled by the
     same newest-wins shadowing as batch updates."""
-    from opensearch_loader_spark.indexer import POSTING_SCHEMA  # noqa: F401
-
     corpus_schema = (
         "url string, warc_ts timestamp, html binary, text string, lang string"
     )

@@ -218,3 +218,40 @@ def test_delta_extracts_html_only_updates(spark, small_index):
     assert seg_docs[0]["text"] == extract_text_from_html(html)
     res = search(spark, small_index, [("q", "rewritten html tokens", 5)]).collect()
     assert seg_docs[0]["doc_id"] in [r["doc_id"] for r in res]
+
+
+def test_delta_numbers_new_urls_in_url_order(spark, small_index):
+    """New urls, one of them html-only, get max_doc_id+1, +2, … in url
+    order whatever the batch order; a re-indexed url keeps its docID; every
+    doc_len is the shared tokenizer's count."""
+    from opensearch_loader_spark.analysis import tokenize
+    from opensearch_loader_spark.corpus import extract_text_from_html
+
+    max_id = load_index_info(small_index)["segments"][0]["max_doc_id"]
+    old = spark.read.parquet(
+        os.path.join(small_index, "segments", "seg-000000", "docs")
+    ).orderBy("doc_id").limit(1).collect()[0]
+    html = b"<html><body><p>Only html: spark pages</p></body></html>"
+    updates = spark.createDataFrame(
+        [
+            ("https://zz.example/b", TS, None, "last new page", "en"),
+            ("https://aa.example/c", TS, bytearray(html), None, "en"),
+            (old["url"], TS, None, "rewritten old page", "en"),
+            ("https://mm.example/a", TS, None, "middle new page", "en"),
+        ],
+        CORPUS_SCHEMA,
+    )
+    m = build_delta_segment(spark, small_index, updates, "seg-000001")
+    assert (m["inserted"], m["updated"]) == (3, 1)
+    docs = {
+        r["url"]: r
+        for r in spark.read.parquet(
+            os.path.join(small_index, "segments", "seg-000001", "docs")
+        ).collect()
+    }
+    new = sorted(u for u in docs if u != old["url"])
+    assert [docs[u]["doc_id"] for u in new] == [max_id + 1, max_id + 2, max_id + 3]
+    assert docs[old["url"]]["doc_id"] == old["doc_id"]
+    assert docs["https://aa.example/c"]["text"] == extract_text_from_html(html)
+    assert all(r["doc_len"] == len(tokenize(r["text"])) for r in docs.values())
+    assert m["max_doc_id"] == max_id + 3

@@ -16,7 +16,7 @@ from opensearch_loader_spark.oracle import (
     oracle_topk_conjunctive,
     reference_query_set,
 )
-from opensearch_loader_spark.query_engine import naive_topk_df, search
+from opensearch_loader_spark.query_engine import search
 
 
 @pytest.fixture(scope="module")
@@ -133,17 +133,6 @@ def test_bmw_conjunctive_rank_identical(spark, tiny_index, oracle_index):
         want = oracle_topk_conjunctive(oracle_index, qtext, k)
         got = [(d_, s) for _, d_, s in sorted(by_q.get(qid, []))]
         _assert_rank_identical(got, want, qid)
-
-
-def test_naive_df_scorer_matches_oracle(spark, tiny_index, oracle_index):
-    d, _ = tiny_index
-    docs = spark.read.parquet(os.path.join(d, "segments", "seg-000000", "docs"))
-    got = [
-        (r["doc_id"], r["score"])
-        for r in naive_topk_df(docs, "shuffle skew", k=10).orderBy("rank").collect()
-    ]
-    want = oracle_topk(oracle_index, "shuffle skew", 10)
-    _assert_rank_identical(got, want, "naive")
 
 
 def test_hydration(spark, tiny_index):

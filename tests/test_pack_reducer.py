@@ -4,6 +4,7 @@ must lay out exactly the bytes a per-run, per-block encoding does."""
 
 import datetime as dt
 import os
+import shutil
 
 import numpy as np
 import pyarrow as pa
@@ -179,6 +180,9 @@ def test_compaction_matches_per_group_merge(spark, tmp_path, monkeypatch, transp
     )
     build_delta_segment(spark, d, updates, "seg-000001", rows_per_run=30)
     segs = ["seg-000000", "seg-000001"]
+    # compaction deletes the merged-from segments: the reference reads a copy
+    before = str(tmp_path / "before")
+    shutil.copytree(d, before)
     if transport == "sharded":
         monkeypatch.setattr(qe, "BITMAP_BROADCAST_MAX_DOC", 16)
     old = spark.conf.get(BATCH_CONF)
@@ -195,6 +199,6 @@ def test_compaction_matches_per_group_merge(spark, tmp_path, monkeypatch, transp
             "max_tf_norm", "doc_gaps", "tfs", "dls",
         ).collect()
     )
-    want = ref_compaction(spark, d, segs, 30, man["avgdl"], 16)
+    want = ref_compaction(spark, before, segs, 30, man["avgdl"], 16)
     assert len({(r[0], r[1]) for r in want if r[0] == "the"}) > 1, "head term must split"
     assert got == want

@@ -54,30 +54,6 @@ def test_hydration_broadcasts_topk(spark, tiny_index):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_salt_plan_broadcast_join(spark, tiny_index):
-    """The skew-plan join (postings × head-term plan) must be a broadcast
-    join — the plan table is tiny by construction."""
-    from opensearch_loader_spark.indexer import salt_postings, skew_plan
-
-    postings = spark.createDataFrame(
-        [("the", i, 1, 10) for i in range(100)] + [("rare", 1, 1, 10)],
-        "term string, doc_id long, tf int, dl int",
-    )
-    plan_df = skew_plan(postings, rows_per_run=10)
-    salted = salt_postings(postings, plan_df)
-    plan = _plan(salted)
-    assert "BroadcastHashJoin" in plan
-    # correctness: head term split into ceil(100/10)=10 runs, rare stays 0
-    runs = {
-        r["term"]: r["n"]
-        for r in salted.groupBy("term")
-        .agg(F.countDistinct("run").alias("n"))
-        .collect()
-    }
-    assert runs["the"] == 10
-    assert runs["rare"] == 1
-
-
 def test_salting_does_not_change_index(spark, tmp_path):
     """Byte-identity: building with aggressive salting vs none yields the
     same decoded postings (SURVEY.md M3 exit test)."""

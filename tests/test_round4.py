@@ -75,45 +75,63 @@ class TestPidColumn:
         assert [a[u] for u in ordered] == list(range(len(ordered)))
 
 
+    def test_bucket_count_follows_input_size(self, spark, tiny_corpus, tmp_path, monkeypatch):
+        """The docID stage sizes its url-range buckets from the input's row
+        count: 200 docs are written as at most defaultParallelism files (not
+        one per bucket of a fixed 32), while an input past
+        DOCS_PER_ID_PARTITION × max(32, cores) rows keeps max(32, cores)
+        buckets."""
+        from opensearch_loader_spark import indexer
+        from opensearch_loader_spark.indexer import prepare_docs
+
+        cores = spark.sparkContext.defaultParallelism
+        out = str(tmp_path / "docs")
+        prepare_docs(tiny_corpus).write.parquet(out)
+        files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        assert 1 <= len(files) <= cores
+
+        monkeypatch.setattr(indexer, "DOCS_PER_ID_PARTITION", 2)
+        assert prepare_docs(tiny_corpus).rdd.getNumPartitions() == max(32, cores)
+
+
 class TestPartialPack:
-    def test_blocks_byte_identical_to_row_shuffle_packer(self, spark, tiny_corpus):
-        """Map-side partial runs merged per (term, run) must produce blocks
-        BYTE-identical to the round-3 row-shuffle pack_blocks, given the
-        same run plan (same docs → same sorted runs → same emit_blocks)."""
+    def test_partial_pack_matches_per_run_encoding(self, spark, tiny_corpus):
+        """Map-side partial runs (flushed every 500 postings, so runs split
+        over many partials) merged per (term, run) must lay out exactly the
+        blocks a plain-Python per-(term, run) encoding of the same postings
+        does, head terms split by the exact df plan."""
+        from collections import Counter
+
+        from test_pack_reducer import ref_blocks, row_key
+
+        from opensearch_loader_spark.analysis import tokenize
         from opensearch_loader_spark.indexer import (
-            pack_blocks,
             pack_partial_runs,
             prepare_docs,
-            salt_postings,
-            skew_plan,
             tokenize_partial_runs,
-            tokenize_postings,
         )
 
         docs = prepare_docs(tiny_corpus).select("doc_id", "text", "doc_len")
-        docs.cache().count()
-        postings = tokenize_postings(docs)
-        plan_df = skew_plan(postings, rows_per_run=40)
-        plan = {r["term"]: r["n_splits"] for r in plan_df.collect()}
+        rows = docs.collect()
+        plan = _exact_plan(rows, rows_per_run=40)
         assert plan, "fixture must exercise head-term splitting"
         avgdl = 260.0
 
-        old = pack_blocks(salt_postings(postings, plan_df), avgdl, 16)
-        new = pack_partial_runs(
+        got = pack_partial_runs(
             tokenize_partial_runs(docs, plan, flush_postings=500), avgdl, 16
-        )
+        ).collect()
 
-        def snap(df):
-            return {
-                (r["term"], r["run"], r["block_id"]): (
-                    r["first_doc_id"], r["last_doc_id"], r["n_docs"],
-                    r["max_tf_norm"], bytes(r["doc_gaps"]), bytes(r["tfs"]),
-                    bytes(r["dls"]),
-                )
-                for r in df.collect()
-            }
-
-        assert snap(new) == snap(old)
+        runs = {}
+        for r in rows:
+            toks = tokenize(r["text"])
+            for term, tf in Counter(toks).items():
+                key = (term, r["doc_id"] % plan.get(term, 1))
+                runs.setdefault(key, []).append((r["doc_id"], tf, len(toks)))
+        want = []
+        for (term, run), ps in runs.items():
+            a = np.array(sorted(ps), dtype=np.int64)
+            want += ref_blocks(term, run, a[:, 0], a[:, 1], a[:, 2], avgdl, 16)
+        assert sorted(row_key(tuple(r)) for r in got) == sorted(map(row_key, want))
 
     def test_sampled_plan_matches_exact_at_mod_1(self, spark, tiny_corpus):
         """At small corpora the sample is exhaustive (mod=1) — sampled
@@ -122,19 +140,26 @@ class TestPartialPack:
         from opensearch_loader_spark.indexer import (
             prepare_docs,
             sampled_skew_plan,
-            skew_plan,
-            tokenize_postings,
         )
 
         docs = prepare_docs(tiny_corpus).select("doc_id", "text")
-        exact = {
-            r["term"]: r["n_splits"]
-            for r in skew_plan(tokenize_postings(docs), rows_per_run=40).collect()
-        }
+        exact = _exact_plan(docs.collect(), rows_per_run=40)
         sampled = sampled_skew_plan(docs, n_docs=200, rows_per_run=40)
         for term, n in exact.items():
             assert term in sampled
             assert n <= sampled[term] <= -(-int(n * 40 * 1.2) // 40) + 1
+
+
+def _exact_plan(rows, rows_per_run: int) -> dict[str, int]:
+    """term → ceil(df / rows_per_run) for every term needing more than one
+    run, df counted in Python over the shared tokenizer."""
+    from collections import Counter
+
+    from opensearch_loader_spark.analysis import tokenize
+
+    df = Counter(t for r in rows for t in set(tokenize(r["text"])))
+    splits = {t: -(-n // rows_per_run) for t, n in df.items()}
+    return {t: k for t, k in splits.items() if k > 1}
 
 
 class TestShardedCompaction:

@@ -1,5 +1,6 @@
 """Segment lifecycle: repeated compactions under the default name, refused
-delta names, manifest statistics and build stage timings."""
+delta names, reclaimed merged-from segments, manifest statistics and build
+stage timings."""
 
 import datetime as dt
 import json
@@ -59,9 +60,19 @@ def _assert_stats(spark, index_dir, man):
         assert man["max_doc_id"] == r["m"]
 
 
+def _listed(index_dir):
+    with open(os.path.join(index_dir, "MANIFEST.json")) as f:
+        return json.load(f)["segments"]
+
+
+def _on_disk(index_dir):
+    return sorted(os.listdir(os.path.join(index_dir, "segments")))
+
+
 def test_repeated_compaction_keeps_index(spark, tmp_path):
     """build → delta → compact → delta → compact, default name both times:
-    the second compaction must not delete the live merged segment."""
+    the second compaction must not delete the live merged segment, and each
+    compaction leaves on disk only the segments MANIFEST lists."""
     d = str(tmp_path / "idx")
     build_index(spark, make_corpus_df(spark, n_docs=120, seed=42), d, n_buckets=4, block_size=16, rows_per_run=50)
     docs = spark.read.parquet(os.path.join(d, "segments", "seg-000000", "docs"))
@@ -77,6 +88,8 @@ def test_repeated_compaction_keeps_index(spark, tmp_path):
     first = compact_segments(spark, d)
     assert first["segment"] == "seg-merged"
     _assert_stats(spark, d, first)
+    assert _on_disk(d) == _listed(d) == ["seg-merged"]
+    _assert_oracle(spark, d)
 
     m = build_delta_segment(
         spark, d,
@@ -85,16 +98,15 @@ def test_repeated_compaction_keeps_index(spark, tmp_path):
         "seg-000002",
     )
     _assert_stats(spark, d, m)
+    assert _on_disk(d) == sorted(_listed(d)) == ["seg-000002", "seg-merged"]
     second = compact_segments(spark, d)
     assert second["segment"] != "seg-merged"
     assert second["merged_from"] == ["seg-merged", "seg-000002"]
     assert second["N"] == 122
     _assert_stats(spark, d, second)
 
-    with open(os.path.join(d, "MANIFEST.json")) as f:
-        live = json.load(f)["segments"]
-    assert live == [second["segment"]]
-    assert os.path.exists(os.path.join(d, "segments", live[0], "manifest.json"))
+    assert _on_disk(d) == _listed(d) == [second["segment"]]
+    assert os.path.exists(os.path.join(d, "segments", second["segment"], "manifest.json"))
     _assert_oracle(spark, d)
 
 
@@ -127,3 +139,35 @@ def test_build_stage_secs_are_durations(tiny_index):
     assert all(v >= 0 for v in stages.values())
     assert all(v >= 0 for v in man["stage_cpu_secs"].values())
     assert sum(stages.values()) <= man["build_secs"] + 1e-9
+
+
+def test_crash_after_flip_leaves_readable_index(spark, tmp_path, monkeypatch):
+    """A compaction that dies deleting the merged-from segments (after the
+    MANIFEST flip) leaves a readable index on the merged segment, and the
+    next compaction removes the leftovers."""
+    import shutil
+
+    d = str(tmp_path / "idx")
+    build_index(spark, make_corpus_df(spark, n_docs=60, seed=3), d, n_buckets=4, block_size=16, rows_per_run=50)
+    build_delta_segment(spark, d, _updates(spark, [("https://new.example/a", "fresh spark delta page")]), "seg-000001")
+    seg_root = os.path.join(d, "segments")
+    rmtree = shutil.rmtree
+
+    def crash(path, *a, **k):
+        if os.path.dirname(path) == seg_root:
+            raise OSError("injected crash after the flip")
+        return rmtree(path, *a, **k)
+
+    monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(OSError, match="injected"):
+        compact_segments(spark, d)
+    monkeypatch.undo()
+    assert _listed(d) == ["seg-merged"]
+    assert _on_disk(d) == ["seg-000000", "seg-000001", "seg-merged"]
+    _assert_oracle(spark, d)
+
+    build_delta_segment(spark, d, _updates(spark, [("https://new.example/b", "second fresh delta")]), "seg-000002")
+    m = compact_segments(spark, d)
+    assert m["merged_from"] == ["seg-merged", "seg-000002"]
+    assert _on_disk(d) == _listed(d) == [m["segment"]]
+    _assert_oracle(spark, d)
